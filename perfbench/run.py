@@ -10,7 +10,8 @@ as the last line of stdout:
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
 
 --trace 0 reports the end-to-end metrics; --trace 1 instruments the layer
-calls and reports the per-layer metrics instead. All scratch data lives in
+calls and reports the per-layer metrics instead. The metric names and units
+are those BENCHMARK.json lists. All scratch data lives in
 .perfbench_work/ under the current directory and is removed on exit.
 """
 
@@ -24,59 +25,6 @@ import shutil
 import subprocess
 import sys
 import time
-
-
-E2E_UNITS = {
-    "setup_s": "s",
-    "events_per_s": "1/s",
-    "freshness_p50_s": "s",
-    "freshness_p90_s": "s",
-}
-
-# per-layer metrics and their units; a layer a workload bypasses reports 0
-LAYER_UNITS = {
-    "epochs.frontier_s": "s",
-    "epochs.frontier_jobs": "count",
-    "lake.merge_s": "s",
-    "lake.merge_jobs": "count",
-    "lake.merge_tasks": "count",
-    "lake.merge_shuffle_bytes_per_event": "B",
-    "lake.merge_rows_out_per_event": "ratio",
-    "lake.compact_s": "s",
-    "lake.compact_calls": "count",
-    "lake.max_files_per_bucket": "count",
-    "lake.preimage_read_s": "s",
-    "lake.preimage_prune_frac": "ratio",
-    "lake.preimage_files_total": "count",
-    "lake.lookup_s": "s",
-    "lake.lookup_tasks": "count",
-    "lake.read_s": "s",
-    "reader.lookups": "count",
-    "reader.lookup_p50_s": "s",
-    "changefeed.batch_s": "s",
-    "changefeed.batches": "count",
-    "changefeed.jobs_per_batch": "count",
-    "changefeed.tasks_per_batch": "count",
-    "changefeed.overhead_s_per_batch": "s",
-    "changefeed.stream_to_replay_ratio": "ratio",
-    "replay.chunks_s": "s",
-    "codec.encode_s": "s",
-    "codec.sized_encode_s": "s",
-    "codec.events_per_message": "count",
-    "codec.bytes_per_event": "B",
-    "consumer.run_s": "s",
-    "consumer.jobs": "count",
-    "consumer.events_per_s": "1/s",
-    "testgen.lateness_p90_s": "s",
-    "testgen.backlog_files_end": "count",
-    "spark.tasks": "count",
-    "spark.executor_run_s": "s",
-    "spark.shuffle_write_bytes": "B",
-    "failed_ops_frac": "ratio",
-    "process.peak_rss_mb": "MB",
-    "trace.events_per_s": "1/s",
-    "trace.freshness_p50_s": "s",
-}
 
 
 def _cores() -> int:
@@ -190,6 +138,8 @@ def main(argv=None) -> int:
     for p in res.problems:
         print(f"problem: {p}", file=sys.stderr)
     e2e = {"setup_s": setup_s, **res.e2e}
+    with open(os.path.join(root, "BENCHMARK.json")) as f:
+        spec = json.load(f)
     if args.trace:
         layers = {
             **res.layers,
@@ -198,10 +148,12 @@ def main(argv=None) -> int:
             "trace.events_per_s": e2e["events_per_s"],
             "trace.freshness_p50_s": e2e["freshness_p50_s"],
         }
-        values = {k: layers.get(k, 0.0) for k in LAYER_UNITS}
-        units = LAYER_UNITS
+        units = {m["name"]: m["unit"] for m in spec["per_layer"]}
+        # a layer the workload bypasses reports 0
+        values = {k: layers.get(k, 0.0) for k in units}
     else:
-        values, units = e2e, E2E_UNITS
+        units = {m["name"]: m["unit"] for m in spec["end_to_end"]}
+        values = {k: e2e[k] for k in units}
     out = {
         "correct": not res.problems and res.failed == 0,
         "attempted": int(res.attempted),

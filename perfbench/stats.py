@@ -27,24 +27,16 @@ def supported(q: float, n: int) -> bool:
     return n - _rank(q, n) >= MIN_BEYOND
 
 
-def percentile(values, q: float, weights=None) -> float:
-    """The q-quantile of `values`, optionally weighted by integer `weights`
-    (a weight of w stands for w equal samples). Raises ValueError when the
+def percentile(values, q: float) -> float:
+    """The nearest-rank q-quantile of `values`. Raises ValueError when the
     sample count cannot support q under the MIN_BEYOND rule, so a metric is
     never reported from a tail too thin to carry it."""
-    v = np.asarray(values, dtype=float)
-    w = np.ones(len(v), dtype=np.int64) if weights is None else np.asarray(weights, np.int64)
-    if len(v) != len(w):
-        raise ValueError("values and weights differ in length")
-    n = int(w.sum())
-    if not supported(q, n):
+    v = np.sort(np.asarray(values, dtype=float))
+    if not supported(q, len(v)):
         raise ValueError(
-            f"p{round(q * 100)} needs {MIN_BEYOND} samples beyond it; have n={n}"
+            f"p{round(q * 100)} needs {MIN_BEYOND} samples beyond it; have n={len(v)}"
         )
-    order = np.argsort(v, kind="stable")
-    v, w = v[order], w[order]
-    # nearest-rank: the smallest value whose cumulative count reaches q*n
-    return float(v[np.searchsorted(np.cumsum(w), _rank(q, n))])
+    return float(v[_rank(q, len(v)) - 1])
 
 
 def median(values) -> float:

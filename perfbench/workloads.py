@@ -42,7 +42,11 @@ CHUNKS = 4
 FILES_PER_CHUNK = 4
 GEN_REPEATS = 3
 MIN_DRAINS = 2
-NOMINAL_DRAIN_S = 7.0    # sizes the drain count from --seconds
+NOMINAL_DRAIN_S = 5.0    # sizes the drain count from --seconds
+# The JVM's JIT keeps speeding drains up for about four drains after start:
+# 11k, 13k, 15k, 17k, then about 18-20k events/s (4 cores). Measured drains
+# on that slope would spread with how far each run got up it.
+WARM_DRAINS = 3
 
 # trickle_old_value
 TRICKLE_KEYS = 15_000
@@ -51,11 +55,16 @@ TRICKLE_BUCKETS = 4
 MQ_PARTITIONS = 4
 DROP_EVENTS = 50
 DROP_RATE = 8.0          # drops per second, open loop
-WARM_DROPS = 1
 READ_EVERY_S = 2.0       # reader schedule, open loop
 READ_KEYS = 3
 COMPACT_MAX_DELTAS = 4
 TRIGGER_S = 5.0          # the feed's processing-time trigger (its default)
+# after the preload, two trigger periods of drops at the window's rate warm
+# the JIT up on the small-batch path, whose batch time otherwise still falls
+# by a third over the next half minute
+WARM_DROPS = int(DROP_RATE * 2 * TRIGGER_S)
+# the traced run's sized-framing feed takes one trickle batch's drops a batch
+SIZED_FILES_PER_TRIGGER = int(DROP_RATE * TRIGGER_S)
 
 
 @dataclass
@@ -79,14 +88,18 @@ class Result:
 
 class BatchLog:
     """post_batch recorder. Per batch: the callback's wall time, the
-    resolved frontier, the batch's events, the feed's own batch seconds,
-    and in traced runs the Spark jobs started since the previous batch."""
+    resolved frontier, the batch's events, the feed's own batch and MQ-leg
+    seconds, and in traced runs the Spark jobs started since the previous
+    batch plus, given the feed's table, the table version the batch started
+    from (the snapshot its old-value pre-images are read at)."""
 
-    def __init__(self, tracer: Tracer):
+    def __init__(self, tracer: Tracer, table: LakeTable | None = None):
         self.tracer = tracer
+        self.table = table if tracer.enabled else None
         self.batches: list[dict] = []
         self._lock = threading.Lock()
         self._mark = tracer.store.mark() if tracer.enabled else None
+        self._version = self.table.version if self.table is not None else None
 
     def __call__(self, summary: dict) -> None:
         rec = {
@@ -94,10 +107,13 @@ class BatchLog:
             "resolved": int(summary["resolved_ts"]),
             "events": int(summary["events"]),
             "batch_s": float(sum(summary["timings"].values())),
+            "mq_s": float(summary["timings"].get("mq", 0.0)),
         }
         if self.tracer.enabled:
             mark, self._mark = self._mark, self.tracer.store.mark()
             rec.update(aggregate_jobs(self.tracer.store.jobs_after(mark)))
+        if self.table is not None:
+            rec["pre_version"], self._version = self._version, self.table.version
         with self._lock:
             self.batches.append(rec)
 
@@ -165,7 +181,6 @@ def _wrap_table(tracer: Tracer, table: LakeTable) -> None:
     tracer.wrap(table, "merge_epoch", "lake.merge", rows_out)
     tracer.wrap(table, "maybe_compact", "lake.compact",
                 lambda r: {"compacted": int(r is not None)})
-    tracer.wrap(table, "read_version_for_keys", "lake.preimage_read")
 
 
 def _replay(ctx: Ctx, groups: list[str], base_table: str | None, n_buckets: int) -> float:
@@ -193,8 +208,12 @@ def _layer_metrics(ctx: Ctx, res: Result, batches: list[dict], events: int,
                    feed_s: float, replay_s: float, n_replayed: int) -> None:
     """Per-layer figures from the spans and the per-batch job counts, over
     `events` released change events. The *_s figures of layers inside a
-    batch are seconds per batch: spans the feed made divide by its batches,
-    replayed spans by the batches the replay covered."""
+    batch are seconds per batch: spans the feed made and the feed's own MQ
+    timing divide by its batches, replayed spans by the batches the replay
+    covered. The overhead is batch time minus the feed's own layer calls
+    (merge, compaction, MQ leg) and the replayed frontier fold; the replayed
+    pre-image read and encode are parts of the MQ leg, so not subtracted
+    again."""
     tr, L = ctx.tracer, res.layers
     nb, nr = max(1, len(batches)), max(1, n_replayed)
     events = max(1, events)
@@ -206,20 +225,22 @@ def _layer_metrics(ctx: Ctx, res: Result, batches: list[dict], events: int,
     compacts = [s for s in tr.spans.get("lake.compact", []) if s["compacted"]]
     L["lake.compact_s"] = sum(s["sec"] for s in compacts) / nb
     L["lake.compact_calls"] = len(compacts)
-    L["lake.preimage_read_s"] = tr.total("lake.preimage_read") / nb
+    L["lake.preimage_read_s"] = tr.total("lake.preimage_read") / nr
     L["lake.read_s"] = tr.total("lake.read") / max(1, tr.count("lake.read"))
     L["epochs.frontier_s"] = tr.total("epochs.frontier") / nr
     L["epochs.frontier_jobs"] = tr.total("epochs.frontier", "jobs") / nr
     L["codec.encode_s"] = tr.total("codec.encode") / nr
-    L["codec.sized_encode_s"] = tr.total("codec.sized_encode") / nr
+    L["changefeed.mq_s"] = sum(b["mq_s"] for b in batches) / nb
     L["changefeed.batches"] = len(batches)
     if batches:
         L["changefeed.batch_s"] = median([b["batch_s"] for b in batches])
         L["changefeed.jobs_per_batch"] = median([b["jobs"] for b in batches])
         L["changefeed.tasks_per_batch"] = median([b["tasks"] for b in batches])
     layer_s = (L["epochs.frontier_s"] + L["lake.merge_s"] + L["lake.compact_s"]
-               + L["lake.preimage_read_s"] + L["codec.encode_s"])
-    L["changefeed.overhead_s_per_batch"] = sum(b["batch_s"] for b in batches) / nb - layer_s
+               + L["changefeed.mq_s"])
+    mean_batch_s = sum(b["batch_s"] for b in batches) / nb
+    L["changefeed.overhead_s_per_batch"] = mean_batch_s - layer_s
+    L["changefeed.overhead_share"] = L["changefeed.overhead_s_per_batch"] / max(1e-9, mean_batch_s)
     L["replay.chunks_s"] = replay_s
     L["changefeed.stream_to_replay_ratio"] = feed_s / replay_s
 
@@ -266,15 +287,13 @@ def bulk_catchup(ctx: Ctx) -> Result:
         t0 = time.perf_counter()
         dirs, binlog = _write_backlog(spec, os.path.join(base, "backlog"), CHUNKS)
         secs.append(time.perf_counter() - t0)
-    _, warm_log = _write_backlog(
-        testgen.BinlogSpec(**{**spec.__dict__, "seed": spec.seed + 1}),
-        os.path.join(base, "warm"), 2,
-    )
+    _write_backlog(testgen.BinlogSpec(**{**spec.__dict__, "seed": spec.seed + 1}),
+                   os.path.join(base, "warm"), CHUNKS)
     res.setup_parts["generate_s"] = median(secs)
     expected = expected_state(binlog)
     data_ts = binlog.filter(pc.not_equal(binlog.column("op"), "R")).column("commit_ts").to_numpy()
 
-    def drain(tag: str, t: Tracer, src: str, want: pa.Table):
+    def drain(tag: str, t: Tracer, src: str, want: pa.Table | None):
         table = LakeTable.create(spark, os.path.join(base, f"{tag}_t"), n_buckets=BULK_BUCKETS)
         _wrap_table(t, table)
         log = BatchLog(t)
@@ -285,7 +304,8 @@ def bulk_catchup(ctx: Ctx) -> Result:
         )
         feed.run_available()
         wall = time.time() - t_due
-        problems = _gate(t, table, want, tag)  # outside the timed region
+        # outside the timed region; warm-up drains are not checked
+        problems = [] if want is None else _gate(t, table, want, tag)
         if t.enabled:
             res.layers["lake.max_files_per_bucket"] = table.max_files_per_bucket()
         for suffix in ("_t", "_ck"):
@@ -293,9 +313,8 @@ def bulk_catchup(ctx: Ctx) -> Result:
         return t_due, wall, log.batches, problems
 
     t0 = time.perf_counter()
-    *_, problems = drain("warm", Tracer(spark, False), os.path.join(base, "warm", "*"),
-                         expected_state(warm_log))
-    res.problems += problems
+    for i in range(WARM_DRAINS):
+        drain(f"w{i}", Tracer(spark, False), os.path.join(base, "warm", "*"), None)
     res.setup_parts["warmup_s"] = time.perf_counter() - t0
 
     # a fixed drain count: stopping on elapsed time would let a fast run
@@ -343,8 +362,8 @@ def trickle_old_value(ctx: Ctx) -> Result:
     os.makedirs(drops_dir)
     os.makedirs(staging)
 
-    # ---- set-up. Drop 0 is the preload: the feed's first batch applies it,
-    # so the preload also warms the feed's code path.
+    # ---- set-up. Drop 0 is the preload: the feed's first batch applies it.
+    # Then WARM_DROPS drops follow at the window's rate.
     t0 = time.perf_counter()
     beat = _heartbeat(os.path.join(base, "beat"))
     drops: list[tuple[pa.Table, int]] = []
@@ -367,7 +386,7 @@ def trickle_old_value(ctx: Ctx) -> Result:
 
     root = os.path.join(base, "table")
     table = LakeTable.create(spark, root, n_buckets=TRICKLE_BUCKETS)
-    log = BatchLog(tr)
+    log = BatchLog(tr, table)
     feed = ChangeFeed(
         table, drops_dir, os.path.join(base, "ck"), post_batch=log,
         mq_dir=mq_dir, mq_partitions=MQ_PARTITIONS, mq_old_value=True,
@@ -388,18 +407,29 @@ def trickle_old_value(ctx: Ctx) -> Result:
             time.sleep(0.02)
         return True
 
+    def on_grid() -> float:
+        """Spark fires processing-time triggers on multiples of the interval
+        since the epoch. Drop schedules start on that grid, half a drop gap
+        past a trigger, so no drop races a trigger's file listing and every
+        run sees the same drop-to-trigger phase."""
+        return np.ceil((time.time() + 0.5) / TRIGGER_S) * TRIGGER_S + 0.5 / DROP_RATE
+
     pristine = os.path.join(base, "pristine")
     t0 = time.perf_counter()
     q = feed.start(processing_time=f"{TRIGGER_S:g} seconds")
     try:
-        for k in range(1 + WARM_DROPS):
+        deliver(0)
+        if not wait_visible(drops[0][1], 90):
+            raise RuntimeError(f"the preload never became visible: {q.exception()}")
+        res.setup_parts["preload_s"] = time.perf_counter() - t0
+        t0 = time.perf_counter()
+        shutil.copytree(root, pristine)  # the feed is idle until the next drop
+        t_warm = on_grid()
+        for k in range(1, 1 + WARM_DROPS):
+            time.sleep(max(0.0, t_warm + (k - 1) / DROP_RATE - time.time()))
             deliver(k)
-            if not wait_visible(drops[k][1], 90):
-                raise RuntimeError(f"set-up drop {k} never became visible: {q.exception()}")
-            if k == 0:
-                res.setup_parts["preload_s"] = time.perf_counter() - t0
-                t0 = time.perf_counter()
-                shutil.copytree(root, pristine)  # the feed is idle until the next drop
+        if not wait_visible(drops[WARM_DROPS][1], 90):
+            raise RuntimeError(f"the warm-up drops never became visible: {q.exception()}")
         res.setup_parts["warmup_s"] = time.perf_counter() - t0
 
         # ---- measured window: generator and reader, both on fixed schedules
@@ -410,11 +440,7 @@ def trickle_old_value(ctx: Ctx) -> Result:
         reads: list[tuple[float, float, bool]] = []  # (due, done, ok)
         rng = np.random.default_rng(ctx.seed)
         totals = Totals(tr)
-        # Spark fires processing-time triggers on multiples of the interval
-        # since the epoch. Start the window on that grid, half a drop gap
-        # past a trigger, so no drop races a trigger's file listing and
-        # every run sees the same drop-to-trigger phase.
-        t_start = np.ceil((time.time() + 0.5) / TRIGGER_S) * TRIGGER_S + 0.5 / DROP_RATE
+        t_start = on_grid()
 
         def generator():
             for j, k in enumerate(range(1 + WARM_DROPS, n_drops)):
@@ -485,8 +511,8 @@ def trickle_old_value(ctx: Ctx) -> Result:
     L["reader.lookups"] = len(reads)
     L["reader.lookup_p50_s"] = median([done - d for d, done, _ in reads])
     if tr.enabled:
-        problems += _trickle_layers(ctx, res, table, window, warm_probes, sent, tops, drops_dir,
-                                    pristine, mq_dir, msgs, nbytes / max(1, msgs), expected)
+        problems += _trickle_layers(ctx, res, table, window, warm_probes, drops, sent, tops,
+                                    drops_dir, pristine, nbytes / max(1, msgs))
     if problems:
         res.failed += len(sent)
         res.problems += problems
@@ -498,18 +524,22 @@ def trickle_old_value(ctx: Ctx) -> Result:
     return res
 
 
-def _trickle_layers(ctx, res, table, window, warm_probes, sent, tops, drops_dir,
-                    pristine, mq_dir, mq_events, bytes_per_event, expected) -> list[str]:
+def _trickle_layers(ctx, res, table, window, warm_probes, drops, sent, tops, drops_dir,
+                    pristine, bytes_per_event) -> list[str]:
     """Traced-run extras of trickle_old_value: layer figures of the feed's
-    own calls, replays of each window batch's drops through the frontier,
-    replay and codec calls, and the MQ round trip through MQConsumer, whose
-    downstream table must equal the oracle. Returns correctness problems."""
+    own calls; replays of each window batch's drops through the frontier,
+    batch-replay, pre-image read and old-value encode calls; and an MQ
+    round trip of the window's drops at the pandas boundary. A second feed,
+    ChangeFeed(mq_framing="sized"), runs them from an empty table, and
+    MQConsumer(framing="sized") decodes its frames into a downstream table,
+    which must equal the oracle of those drops. Returns correctness
+    problems."""
     from pyspark.sql import functions as F
 
-    from ticdc_spark.functions.codec import KEY_FIELDS, encode_open_protocol_sized
+    from ticdc_spark.functions.codec import KEY_FIELDS
+    from ticdc_spark.streaming.changefeed import attach_old_value_json
     from ticdc_spark.streaming.consumer import MQConsumer
     from ticdc_spark.streaming.dispatch import dispatcher_for
-    from ticdc_spark.streaming.protocols import encode_mq
 
     spark, tr, L = ctx.spark, ctx.tracer, res.layers
     lookups = tr.spans.get("lake.lookup", [])
@@ -532,36 +562,56 @@ def _trickle_layers(ctx, res, table, window, warm_probes, sent, tops, drops_dir,
             for k, _, _ in sent[lo:hi]:
                 name = f"drop-{k:06d}.parquet"
                 os.link(os.path.join(drops_dir, name), os.path.join(g, name))
-            groups.append(g)
+            groups.append((g, b))
             lo = hi
-    replay_s = _replay(ctx, groups, pristine, TRICKLE_BUCKETS)
+    replay_s = _replay(ctx, [g for g, _ in groups], pristine, TRICKLE_BUCKETS)
 
+    # the feed's MQ leg, replayed on the feed's table at each batch's
+    # starting version: the pruned pre-image read, forced by a count, and
+    # the old-value encode the feed runs, forced by a no-op write
     key_json = F.to_json(F.struct(*[F.col(c) for c in KEY_FIELDS])).alias("key_json")
     part = dispatcher_for("index-value", MQ_PARTITIONS, key_col="doc_id")
-    payload = [f["name"] for f in table.current_fields if f["name"] != "doc_id"]
-    frames = events = 0
-    for g in groups:
+    for g, b in groups:
         ev = open_binlog(spark, g).filter(F.col("op") != "R")
+        with tr.span("lake.preimage_read"):
+            table.read_version_for_keys(b["pre_version"], ev.select("doc_id").distinct()).count()
         with tr.span("codec.encode"):
-            encode_mq(ev, table, "open", key_json, part).write.format("noop").mode("overwrite").save()
-        with tr.span("codec.sized_encode"):
-            row = encode_open_protocol_sized(ev.withColumn("partition", part), payload).agg(
-                F.count("*"), F.sum("n_events")).collect()[0]
-        frames += row[0]
-        events += row[1] or 0
+            attach_old_value_json(table, ev, b["pre_version"], key_json, part,
+                                  n_events=b["events"]).write.format("noop").mode("overwrite").save()
+
+    problems = []
+    window_log = pa.concat_tables([drops[k][0] for k, _, _ in sent[:lo]])
+    released = pc.sum(pc.not_equal(window_log.column("op"), "R")).as_py()
+    sized_mq = os.path.join(ctx.work, "sized_mq")
+    sized_table = LakeTable.create(spark, os.path.join(ctx.work, "sized_t"), n_buckets=TRICKLE_BUCKETS)
+    slog = BatchLog(Tracer(spark, False))
+    ChangeFeed(
+        sized_table, os.path.join(ctx.work, "replay_in", "*"), os.path.join(ctx.work, "sized_ck"),
+        max_files_per_trigger=SIZED_FILES_PER_TRIGGER, post_batch=slog,
+        mq_dir=sized_mq, mq_partitions=MQ_PARTITIONS, mq_framing="sized",
+    ).run_available()
+    frames = events = 0
+    for f in glob.glob(os.path.join(sized_mq, "batch-*", "partition=*", "*.parquet")):
+        n = pq.read_table(f, columns=["n_events"]).column("n_events")
+        frames += len(n)
+        events += pc.sum(n).as_py() or 0
+    if events != released:
+        problems.append(f"sized MQ carried {events} events, released {released}")
+    L["codec.sized_encode_s"] = median([b["mq_s"] for b in slog.batches])
     L["codec.events_per_message"] = events / max(1, frames)
 
-    down = LakeTable.create(spark, os.path.join(ctx.work, "downstream"), n_buckets=TRICKLE_BUCKETS)
+    down = LakeTable.create(spark, os.path.join(ctx.work, "sized_down"), n_buckets=TRICKLE_BUCKETS)
     t0 = time.perf_counter()
     with tr.span("consumer.run"):
-        consumed = MQConsumer(spark, mq_dir, down).run_once()
+        consumed = MQConsumer(spark, sized_mq, down, framing="sized").run_once()
     run_s = time.perf_counter() - t0
+    problems += _gate(tr, down, expected_state(window_log), "sized downstream")
     L["consumer.run_s"] = run_s / max(1, len(consumed))
     L["consumer.jobs"] = tr.total("consumer.run", "jobs") / max(1, len(consumed))
-    L["consumer.events_per_s"] = mq_events / run_s
+    L["consumer.events_per_s"] = events / run_s
     _layer_metrics(ctx, res, window, sum(b["events"] for b in window),
                    sum(b["batch_s"] for b in window), replay_s, len(groups))
-    return _gate(tr, down, expected, "downstream")
+    return problems
 
 
 WORKLOADS = {
