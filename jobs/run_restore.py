@@ -36,7 +36,7 @@ def main() -> int:
     p.add_argument("--key-col", default="doc_id")
     p.add_argument(
         "--collapse", default="bucket_window",
-        choices=["bucket_window", "agg", "semijoin", "salted"],
+        choices=["bucket_window", "agg"],
     )
     args = p.parse_args()
 

@@ -165,7 +165,9 @@ def render_metrics(
             for c in caps:
                 try:
                     pq = processor_query(scheduler_state, c["id"])
-                except (OSError, KeyError):
+                except (OSError, KeyError, ValueError):
+                    # fail closed per capture: a corrupt manifest (JSON
+                    # ValueError) drops this capture's series, not the page
                     continue
                 live = 0
                 for t, pos in sorted(pq["tables"].items()):

@@ -1171,3 +1171,46 @@ def test_cross_table_tail_collision_keeps_both_rows(spark, tmp_path):
     b = {r["doc_id"]: r["n_tok"] for r in LakeTable(spark, str(tmp_path / "tb")).read().collect()}
     assert a.get("doc_1") == 3, a  # ta's colliding event survived
     assert b.get("doc_1") == 5, b  # tb's colliding event survived
+
+
+def test_late_event_error_names_the_data_ddl_reason(spark, tmp_path):
+    """Late events are fatal in a multi-table feed that carries a
+    data-wiping DDL (no old value): the error names THAT requirement, not
+    enable-old-value."""
+    import pytest
+
+    binlog = str(tmp_path / "binlog")
+    os.makedirs(binlog)
+
+    def stage(rows, fname):
+        # rows: (commit_ts, seq, op, doc_id), all on table ta, part 0
+        pq.write_table(pa.table({
+            "commit_ts": pa.array([r[0] for r in rows], pa.int64()),
+            "seq": pa.array([r[1] for r in rows], pa.int64()),
+            "table": pa.array(["ta"] * len(rows), pa.string()),
+            "op": pa.array([r[2] for r in rows], pa.string()),
+            "doc_id": pa.array([r[3] for r in rows], pa.string()),
+            "tokens": pa.array([[1, 2]] * len(rows), pa.list_(pa.int32())),
+            "n_tok": pa.array([2] * len(rows), pa.int32()),
+            "source": pa.array(["web"] * len(rows), pa.string()),
+            "part": pa.array([0] * len(rows), pa.int32()),
+            "schema_version": pa.array([0] * len(rows), pa.int32()),
+        }), os.path.join(binlog, fname))
+
+    ta = LakeTable.create(spark, str(tmp_path / "ta"), n_buckets=2)
+    ddl_rows = [{"commit_ts": 10_000, "ddl_type": "truncate_table",
+                 "table": "ta", "spec": "{}"}]
+
+    def feed():
+        return MultiTableChangeFeed(
+            {"ta": ta}, binlog, str(tmp_path / "ckpt"),
+            max_files_per_trigger=1, ddl_rows=ddl_rows,
+        )
+
+    stage([(100, 1, "I", "a"), (200, 2, "I", "b")], "f1.parquet")
+    assert feed().run_available()[-1]["resolved_ts"] == 200
+    stage([(150, 3, "U", "a")], "f2.parquet")  # at or below ta's span frontier
+    with pytest.raises(Exception, match="late-event") as err:
+        feed().run_available()
+    assert "required by barrier-ordered data DDL" in str(err.value)
+    assert "enable-old-value" not in str(err.value)

@@ -78,11 +78,12 @@ def test_replay_partial_then_full_epochs_idempotent(spark, tmp_path):
     assert not problems, problems[:3]
 
 
-@pytest.mark.parametrize("collapse", ["bucket_window", "agg", "salted", "semijoin"])
+@pytest.mark.parametrize("collapse", ["bucket_window", "agg"])
 def test_replay_collapse_strategies_match_oracle(spark, tmp_path, collapse):
-    """All four LWW collapse strategies (operators/lww.py) drive replay to
-    the identical oracle state — bucket_window is the fused single-shuffle
-    default, the others are skew/comparison alternatives."""
+    """Both engine LWW collapse strategies (engine.replay.COLLAPSE) drive
+    replay to the identical oracle state — bucket_window is the fused
+    single-shuffle default, agg the skew alternative. The other operators/
+    lww.py variants' equivalence is property-tested in test_lww.py."""
     spec = BinlogSpec(
         n_events=12_000, n_keys=1_200, seed=31,
         tie_frac=0.4, dup_seq_tie_frac=0.2, p_delete=0.15, p_insert=0.55,

@@ -24,6 +24,7 @@ from ticdc_spark.lake.table import LakeTable
 from ticdc_spark.oracle import apply_binlog_raw, diff_tables
 from ticdc_spark.streaming.changefeed import ChangeFeed
 from ticdc_spark.streaming.consumer import MQConsumer
+from ticdc_spark.streaming.multi import MultiTableChangeFeed
 from ticdc_spark.testgen import BinlogSpec, binlog_to_raw, generate_binlog, write_raw_binlog
 
 BASE = [
@@ -166,16 +167,35 @@ def test_consumer_raises_on_ddl_beyond_frontier(spark, tmp_path):
     assert not t.committed_epochs
 
 
-class _CrashAfterDDL(ChangeFeed):
-    """Simulates a driver crash BETWEEN a DDL's schema commit and the next
-    slice's merge — the exact window ADVICE.md flagged."""
+def _crash_after_ddl(feed_cls):
+    """feed_cls with a driver crash BETWEEN a DDL's schema commit and the
+    next slice's merge — the exact window ADVICE.md flagged — hooked on the
+    barrier step both feeds share."""
 
-    def _advance_lake_schema(self, ver, fields_next, epoch_id):
-        super()._advance_lake_schema(ver, fields_next, epoch_id)
-        raise RuntimeError("simulated crash after DDL schema commit")
+    class CrashAfterDDL(feed_cls):
+        def _execute_barrier(self, *args):
+            super()._execute_barrier(*args)
+            raise RuntimeError("simulated crash after DDL schema commit")
+
+    return CrashAfterDDL
 
 
-def test_crash_replay_between_ddl_commit_and_next_slice(spark, tmp_path):
+def _open_feed(feed_cls, t, tmp_path, ddl_rows):
+    if issubclass(feed_cls, MultiTableChangeFeed):
+        return feed_cls(
+            {"target_tokens": t}, str(tmp_path / "binlog"), str(tmp_path / "ckpt"),
+            mode="raw", ddl_rows=[{**r, "table": "target_tokens"} for r in ddl_rows],
+        )
+    return feed_cls(
+        t, str(tmp_path / "binlog"), str(tmp_path / "ckpt"),
+        mode="raw", ddl_rows=ddl_rows,
+    )
+
+
+@pytest.mark.parametrize(
+    "feed_cls", [ChangeFeed, MultiTableChangeFeed], ids=["ChangeFeed", "MultiTableChangeFeed"]
+)
+def test_crash_replay_between_ddl_commit_and_next_slice(spark, tmp_path, feed_cls):
     spec = BinlogSpec(n_events=5_000, n_keys=500, seed=92, p_delete=0.12, p_insert=0.58)
     typed = generate_binlog(spec)
     lo = pc.min(typed.column("commit_ts")).as_py()
@@ -186,20 +206,14 @@ def test_crash_replay_between_ddl_commit_and_next_slice(spark, tmp_path):
     ddl_rows = [{"commit_ts": ts, "ddl_type": ty, "spec": s} for ts, ty, s in ddls]
 
     t = LakeTable.create(spark, str(tmp_path / "tbl"), n_buckets=4)
-    crashing = _CrashAfterDDL(
-        t, str(tmp_path / "binlog"), str(tmp_path / "ckpt"),
-        mode="raw", ddl_rows=ddl_rows,
-    )
+    crashing = _open_feed(_crash_after_ddl(feed_cls), t, tmp_path, ddl_rows)
     with pytest.raises(Exception, match="simulated crash"):
         crashing.run_available()
     assert t.schema_version == 1  # DDL committed before the crash
 
     # restart: same checkpoint → Structured Streaming replays the batch
-    cf = ChangeFeed(
-        t, str(tmp_path / "binlog"), str(tmp_path / "ckpt"),
-        mode="raw", ddl_rows=ddl_rows,
-    )
-    summaries = cf.run_available()
+    t = LakeTable(spark, str(tmp_path / "tbl"))
+    summaries = _open_feed(feed_cls, t, tmp_path, ddl_rows).run_available()
     resolved = summaries[-1]["resolved_ts"]
     expected = apply_binlog_raw(raw, BASE, ddls, upto_ts=resolved)
     pdf = t.read().toPandas().sort_values("doc_id").reset_index(drop=True)

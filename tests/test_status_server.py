@@ -350,3 +350,33 @@ def test_metrics_exposition(tmp_path):
         assert types["ticdc_spark_owner_checkpoint_ts"] == "gauge"
     finally:
         srv.shutdown()
+
+
+def test_metrics_survive_corrupt_table_manifest(tmp_path):
+    """A corrupt per-table manifest fails closed: /metrics still answers
+    200, and the other captures' table series are still exported."""
+    admin = str(tmp_path / "admin")
+    FeedRegistry(admin)
+    roots = {}
+    for name, body in (("good", json.dumps({"part_watermarks": {"0": 700}})),
+                       ("bad", "{not json")):
+        root = tmp_path / name
+        (root / "_manifests").mkdir(parents=True)
+        (root / "_manifests" / "CURRENT").write_text("1")
+        (root / "_manifests" / "v00000001.json").write_text(body)
+        roots[name] = str(root)
+    state = tmp_path / "sched.json"
+    state.write_text(json.dumps({"jobs": [], "captures": {
+        "c1": {"tb": {"stopped": False, "stop_ts": None, "root": roots["bad"]}},
+        "c2": {"tg": {"stopped": False, "stop_ts": None, "root": roots["good"]}},
+    }}))
+    srv, port = serve_background(admin, str(state))
+    try:
+        code, body, _ = _get(f"http://127.0.0.1:{port}/metrics")
+        assert code == 200
+        vals, _ = _parse_exposition(body)
+        assert vals[("ticdc_spark_processor_checkpoint_ts", 'capture="c2",table="tg"')] == 700
+        assert vals[("ticdc_spark_processor_num_of_tables", 'capture="c2"')] == 1
+        assert not any(lbl.startswith('capture="c1",') for _, lbl in vals)
+    finally:
+        srv.shutdown()

@@ -18,25 +18,39 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..lake.table import LakeTable
-from ..operators.epochs import epoch_slice, frontier_and_bounds, resolved_frontier
-from ..operators.lww import (
-    lww_collapse_prearranged,
-    lww_latest_agg,
-    lww_latest_salted,
-    lww_latest_semijoin,
-)
+from ..operators.epochs import frontier_and_bounds
+from ..operators.lww import lww_collapse_prearranged, lww_latest_agg
+
+# LWW collapse strategies (operators/lww.py) the engine's apply path offers;
+# both produce identical winners and differ only in physical plan
+COLLAPSE = ("bucket_window", "agg")
+
+
+def check_collapse(collapse: str, table: str | None = None) -> str:
+    if collapse not in COLLAPSE:
+        where = "" if table is None else f" for table {table!r}"
+        raise ValueError(f"unknown collapse strategy {collapse!r}{where}")
+    return collapse
 
 
 def replay_epoch(
-    table: LakeTable, events: DataFrame, epoch_id: str, collapse: str = "bucket_window"
+    table: LakeTable,
+    events: DataFrame,
+    epoch_id: str,
+    collapse: str = "bucket_window",
+    watermarks: dict | None = None,
 ) -> dict:
-    """Dedup one epoch's events and merge. events: binlog-schema rows.
+    """Dedup one epoch's events and merge — the apply step of batch replay
+    and of both changefeeds. events: mounted rows carrying the key, op,
+    commit_ts, seq and the table's current payload columns; watermarks: the
+    span positions the commit persists (LakeTable.merge_epoch).
 
-    collapse: "bucket_window" (default — single payload shuffle fused with
-    the bucketed MOR write), "agg" (map-side combine; the skew-immune choice
-    for hot-key feeds), "semijoin", or "salted". All four produce identical
-    winners (operators/lww.py); they differ only in physical plan.
+    collapse: "bucket_window" (default — a single payload shuffle fused
+    with the bucketed MOR write, lww_collapse_prearranged) or "agg" (max_by
+    with map-side partial aggregation: a hot key collapses across all input
+    tasks BEFORE the shuffle — the choice for adversarial per-key skew).
     """
+    check_collapse(collapse)
     key = table.key_col
     payload = [f["name"] for f in table.current_fields if f["name"] != key]
     cols = [key, "op", "commit_ts", "seq", *payload]
@@ -49,15 +63,13 @@ def replay_epoch(
             ev, table._bucket_expr(table.bucket_col), table.n_buckets, [key]
         )
         return table.merge_epoch(
-            winners, epoch_id, assume_deduped=True, prearranged=True
+            winners, epoch_id, watermarks=watermarks, assume_deduped=True,
+            prearranged=True,
         )
-    fn = {
-        "agg": lww_latest_agg,
-        "salted": lww_latest_salted,
-        "semijoin": lww_latest_semijoin,
-    }[collapse]
-    winners = fn(ev, [key])
-    return table.merge_epoch(winners, epoch_id, assume_deduped=True)
+    return table.merge_epoch(
+        lww_latest_agg(ev, [key]), epoch_id, watermarks=watermarks,
+        assume_deduped=True,
+    )
 
 
 def replay_binlog(

@@ -485,25 +485,20 @@ DEFAULT_MAX_MESSAGE_BYTES = 64 * 1024 * 1024  # json.go:39
 DEFAULT_MAX_BATCH_SIZE = 16  # json.go:41
 
 
-def split_open_protocol_sized(
-    keys: list[str],
-    values: list[str | None],
+def split_sized(
+    sizes: list[int],
     max_batch_size: int = DEFAULT_MAX_BATCH_SIZE,
     max_message_bytes: int = DEFAULT_MAX_MESSAGE_BYTES,
 ) -> list[tuple[int, int]]:
-    """The reference's greedy message split (json.go:394-399), verbatim:
+    """The reference's greedy message split (json.go:394-399), verbatim,
+    over each event's framed size (8B keyLen + key + 8B valueLen + value):
     walking events in order, open a new message when the current one already
-    holds max_batch_size events OR appending (8B keyLen + key + 8B valueLen
-    + value) would exceed max_message_bytes. A single event larger than the
-    byte cap still ships alone (json.go:414-418 warns, never drops).
-    Returns [start, end) event-index ranges, one per message."""
+    holds max_batch_size events OR appending the event would exceed
+    max_message_bytes. A single event larger than the byte cap still ships
+    alone (json.go:414-418 warns, never drops). Returns [start, end)
+    event-index ranges, one per message."""
     msgs: list[list[int]] = []  # [start_idx, length_bytes, n_events]
-    for i, (k, v) in enumerate(zip(keys, values)):
-        add = (
-            len(k.encode("utf-8"))
-            + (0 if v is None else len(v.encode("utf-8")))
-            + 16
-        )
+    for i, add in enumerate(sizes):
         if (
             not msgs
             or msgs[-1][2] >= max_batch_size
@@ -513,6 +508,20 @@ def split_open_protocol_sized(
         msgs[-1][1] += add
         msgs[-1][2] += 1
     return [(s, s + n) for s, _, n in msgs]
+
+
+def split_open_protocol_sized(
+    keys: list[str],
+    values: list[str | None],
+    max_batch_size: int = DEFAULT_MAX_BATCH_SIZE,
+    max_message_bytes: int = DEFAULT_MAX_MESSAGE_BYTES,
+) -> list[tuple[int, int]]:
+    """:func:`split_sized` over (key, value) JSON strings."""
+    sizes = [
+        len(k.encode("utf-8")) + (0 if v is None else len(v.encode("utf-8"))) + 16
+        for k, v in zip(keys, values)
+    ]
+    return split_sized(sizes, max_batch_size, max_message_bytes)
 
 
 def frame_sized_messages(
@@ -564,34 +573,22 @@ def frame_sized_messages(
         # the sized-framing overhead at 10^6-event batches
         kenc = [k.encode("utf-8") for k in pdf["_k"]]
         venc = [None if pd.isna(v) else v.encode("utf-8") for v in pdf["_v"]]
-        lens = [
-            len(k) + (0 if v is None else len(v)) + 16
-            for k, v in zip(kenc, venc)
-        ]
-        # the reference's greedy rule (json.go:394-399) over precomputed ints
-        bounds: list[list[int]] = []  # [start, bytes, n]
-        for i, add in enumerate(lens):
-            if (
-                not bounds
-                or bounds[-1][2] >= max_batch_size
-                or bounds[-1][1] + add > max_message_bytes
-            ):
-                bounds.append([i, 8, 0])  # 8B version head
-            bounds[-1][1] += add
-            bounds[-1][2] += 1
+        bounds = split_sized(
+            [len(k) + (0 if v is None else len(v)) + 16 for k, v in zip(kenc, venc)],
+            max_batch_size, max_message_bytes,
+        )
         pq = _struct.Struct(">Q").pack
         head = pq(BATCH_VERSION_1)
         out = []
         grp = pdf["_grp"].iloc[0]
-        for idx, (s, _, n) in enumerate(bounds):
-            e = s + n
+        for idx, (s, e) in enumerate(bounds):
             kb = head + b"".join(
                 pq(len(k)) + k for k in kenc[s:e]
             )
             vb = b"".join(
                 pq(0) if v is None else pq(len(v)) + v for v in venc[s:e]
             )
-            out.append((grp, idx, n, kb, vb))
+            out.append((grp, idx, e - s, kb, vb))
         return pd.DataFrame(
             out,
             columns=[group_col, "msg_idx", "n_events", "key_bytes", "value_bytes"],

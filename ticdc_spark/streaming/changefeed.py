@@ -1,59 +1,48 @@
-"""ChangeFeed — the Structured Streaming replication job (the whole TiCDC
-pipeline as one Spark streaming query).
+"""ChangeFeed — the single-table Structured Streaming replication job (the
+whole TiCDC pipeline as one Spark streaming query).
 
-Per micro-batch (SURVEY.md §3.2, cdc/processor/pipeline/table.go:136-169
-`puller → sorter → mounter → sink` collapsed into foreachBatch):
+The per-batch pipeline — pending tail, span frontier fold and topology,
+contract checks, barrier slicing, mount + LWW collapse + idempotent merge,
+MQ emission, lifecycle gate — is streaming.feed.FeedBase over the pure
+control plane in streaming.frontier, shared with MultiTableChangeFeed.
+What is ChangeFeed's own:
 
-  1. union new files with the carried-over tail (EntrySorter's retained
-     suffix: events above the previous resolved-ts,
-     cdc/puller/entry_sorter.go:119-155)
-  2. advance per-partition watermarks monotonically; global resolved-ts =
-     min over partitions (frontier.Frontier(), kafka_consumer/main.go:531-544)
-  3. events ≤ resolved-ts are releasable; the rest become the next tail —
-     so applied state is always a commit-ts-prefix of the stream, exactly
-     the reference's sink consistency guarantee
-  4. DDL barriers: a DDL with finished_ts ≤ resolved-ts splits the batch —
-     DML with commit_ts ≤ ddl_ts applies on the old schema (the equals case
-     uses the PRE-ddl schema, cdc/entry/mounter.go:242-247; checkpoint
-     capped at FinishedTS-1, cdc/changefeed.go:899-910), then the lake
-     schema advances, then the remainder applies
-  5. each slice: mount (per-version decode) → LWW dedup → idempotent
-     conditional MERGE keyed by (batch_id, slice) — Structured Streaming
-     replays a failed batch with the same batch_id, the lake skips
-     already-committed epoch ids → exactly-once final state
-  6. per-partition lineage row per epoch (TaskPosition,
-     cdc/model/owner.go:77-86) appended transaction-adjacent (data commit
-     is the source of truth; lineage is reconciled idempotently by key)
+  * start_ts / target_ts: the replication window (§3.1, owner.go:938-946)
+  * strict_watermarks: the late-event panic without a data reason
+  * cyclic replication: echo filter + mark writes (pkg/cyclic)
+  * MOR compaction and snapshot expiry per batch
+  * the per-partition lineage row per epoch (TaskPosition,
+    cdc/model/owner.go:77-86), appended transaction-adjacent (data commit
+    is the source of truth; lineage is reconciled idempotently by key)
+
+Its one table is named None in the shared per-table maps, which keeps its
+epoch ids (cf-<feed>-<batch>-s<k>), DDL epoch ids (ddl-<ts>) and MQ DDL
+files (ddl-<ts>.parquet) in their single-table form.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..engine.replay import check_collapse
 from ..lake.table import LakeTable
 from ..model import BINLOG_SCHEMA
-from ..operators.lww import lww_latest_semijoin
-from ..operators.mounter import mount_raw, mount_typed
-from .registry import SchemaRegistry
-
-RAW_BINLOG_SCHEMA = T.StructType(
-    [
-        T.StructField("commit_ts", T.LongType(), False),
-        T.StructField("seq", T.LongType(), False),
-        T.StructField("table", T.StringType(), False),
-        T.StructField("op", T.StringType(), False),
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("payload", T.StringType(), True),
-        T.StructField("part", T.IntegerType(), False),
-        T.StructField("schema_version", T.IntegerType(), False),
-    ]
+from .feed import (  # noqa: F401 — attach_old_* stay importable from here
+    RAW_BINLOG_SCHEMA,
+    Batch,
+    FeedBase,
+    attach_old_images,
+    attach_old_value_json,
+    part_stats,
+    schema_version_violation,
 )
+from .frontier import batch_meta
+from .registry import SchemaRegistry
 
 LINEAGE_SCHEMA = (
     "batch_id long, epoch_id string, part int, event_count long, "
@@ -61,240 +50,9 @@ LINEAGE_SCHEMA = (
 )
 
 
-def schema_version_violation(ddl_ts: list[int]):
-    """1 for a row stamped with a schema_version ABOVE version_at(commit_ts)
-    — the producer contract the mounter's versions_present hint relies on
-    (snapshot-at-CRTs-1, cdc/entry/mounter.go:242-247). Such a row would be
-    silently dropped by the hinted per-version union, so the feed checks the
-    count in the same part_stats job and fails loudly instead."""
-    expected = F.lit(0)
-    for ts in ddl_ts:
-        expected = expected + F.when(F.col("commit_ts") > F.lit(ts), 1).otherwise(0)
-    return F.when(F.col("schema_version") > expected, 1).otherwise(0)
+class ChangeFeed(FeedBase):
+    typed_mount = True
 
-
-# lossless cast directions: metadata-only widen is safe, the read-time cast
-# by field id never loses information. Anything else is a MODIFY (physical
-# rewrite) — MySQL's modify column rewrites for the same reason.
-_WIDENING = {
-    ("tinyint", "smallint"), ("tinyint", "int"), ("tinyint", "bigint"),
-    ("smallint", "int"), ("smallint", "bigint"),
-    ("int", "bigint"), ("int", "double"),
-    ("float", "double"),
-}
-
-
-def is_widening(frm: str, to: str) -> bool:
-    f, t = frm.strip().lower(), to.strip().lower()
-    return f == t or t == "string" or (f, t) in _WIDENING
-
-
-def advance_lake_schema(table: LakeTable, fields_next: list[dict], epoch_id: str) -> None:
-    """Diff current lake fields vs target and emit add/widen/modify/rename/
-    drop ops. (The registry and lake share field ids, so the diff is exact.)
-    Type changes split by direction: lossless → widen_column (metadata-only
-    commit); lossy/narrowing → modify_column (atomic physical rewrite,
-    ActionModifyColumn parity, schema_storage.go:539-624)."""
-    cur = {f["id"]: f for f in table.current_fields}
-    next_ids = {f["id"] for f in fields_next}
-    ops: list[tuple[str, dict]] = []
-    for fid, c in cur.items():
-        if fid not in next_ids:
-            ops.append(("drop_column", {"name": c["name"]}))
-    for f in fields_next:
-        c = cur.get(f["id"])
-        if c is None:
-            spec = {"name": f["name"], "type": f["type"]}
-            if f.get("initial_default") is not None:
-                # carry ADD COLUMN ... DEFAULT through to the lake so its
-                # read-time projection of pre-DDL files matches the mounter
-                spec["default"] = f["initial_default"]
-            ops.append(("add_column", spec))
-        elif c["name"] != f["name"]:
-            ops.append(("rename_column", {"from": c["name"], "to": f["name"]}))
-        elif c["type"] != f["type"]:
-            kind = (
-                "widen_column"
-                if is_widening(c["type"], f["type"])
-                else "modify_column"
-            )
-            ops.append((kind, {"name": f["name"], "to": f["type"]}))
-    # per-op epoch ids: a multi-change diff must not have its tail ops
-    # swallowed by the first op's idempotence record
-    for k, (typ, spec) in enumerate(ops):
-        eid = f"{epoch_id}#{k}" if len(ops) > 1 else epoch_id
-        if typ == "modify_column":
-            table.modify_column(spec, eid)
-        else:
-            table.update_schema(typ, spec, eid)
-
-
-def attach_old_images(
-    table: LakeTable,
-    ready: DataFrame,
-    pre_version: int,
-    n_events: int | None = None,
-) -> DataFrame:
-    """Attach old_<col>/had_old to every emitted event (enable-old-value).
-    In-batch pre-images come from the apply-order lag window (operators.
-    lww.with_old_image); each key's FIRST in-batch event takes its image
-    from the pre-batch snapshot instead, read KEY-pruned to the batch's key
-    set (read_version_for_keys: per-file min/max + key-bloom sidecar file
-    skipping, semi-join before the collapse — read volume and collapse
-    shuffle ∝ the batch's keys, never touched-bucket size) — the lake-side
-    analog of TiKV handing TiCDC the old value with the write. A key absent
-    from the snapshot (true insert) keeps had_old = false.
-
-    Requires the resolved-ts arrival contract (no events at or below the
-    released frontier): reconstruction is sequence-sensitive, so
-    enable-old-value forces the late-event panic in the feed even when
-    strict watermarks are off. Events whose in-batch predecessor is a
-    delete keep a NULL image (row was absent — the window already encodes
-    that). Shared by ChangeFeed and MultiTableChangeFeed (per table)."""
-    from ..model import SYS_DELETED
-    from ..operators.lww import with_old_image
-
-    key = table.key_col
-    payload = [f["name"] for f in table.current_fields if f["name"] != key]
-    # adaptive pre-image read. The key-pruned path (per-file key blooms +
-    # pre-collapse semi-join, read_version_for_keys) wins when the batch
-    # touches a small fraction of the snapshot — the 10^10-scale design
-    # point where change volume ≪ corpus: read volume and collapse shuffle
-    # become ∝ the batch's keys. A bulk batch touching most keys (backfill,
-    # the replay bench) would pay probe+broadcast overhead for no pruning:
-    # it reads the whole snapshot with ZERO extra jobs instead — a batch
-    # touching ≥25% of rows touches essentially every bucket, so
-    # bucket-level pruning could not pay for its own aggregation job. The
-    # gate count rides the caller's part_stats fold for free (n_events);
-    # events ≥ keys, so events*4 < snapshot rows guarantees the batch is
-    # genuinely sparse, and the sparse branch's key-distinct is then ∝ the
-    # (small) batch by construction.
-    unioned = _pre_image_union(table, ready, pre_version, payload, n_events)
-    unioned = with_old_image(unioned, payload)
-    return unioned.filter(~F.col("_pre")).drop("_pre")
-
-
-def _pre_image_union(
-    table: LakeTable,
-    ready: DataFrame,
-    pre_version: int,
-    payload: list[str],
-    n_events: int | None,
-) -> DataFrame:
-    """Events + the pre-batch snapshot as pseudo-events, marked `_pre`.
-
-    The snapshot rides the SAME lag window as the in-batch events: each
-    live snapshot row enters as a pseudo-event at (commit_ts=-2^62, seq=0,
-    op='I') — below every real event, since arrival ts are nonnegative —
-    so a key's first real event lags straight onto its table image and a
-    true insert (no pseudo-row) lags onto nothing (had_old=false). This
-    replaces the former events⋈snapshot join: one Window stage, zero
-    join stages, and the snapshot rows pass through the key shuffle
-    once instead of being SMJ-copied onto every event of their key.
-    A batch DDL may have added columns the snapshot predates — their
-    pre-image is NULL by construction (type-cast NULL fills)."""
-    from ..model import SYS_DELETED
-
-    key = table.key_col
-    if n_events is None:
-        n_events = ready.count()
-    pre_rows = table.version_rows(pre_version)
-    sparse = pre_rows is not None and n_events * 4 < pre_rows
-    if sparse:
-        # one distinct, localCheckpointed so the file-prune probe job and
-        # the semi-join read one materialization; the driver sees O(files)
-        # pruned indexes, never keys
-        keys_df = ready.select(F.col(key)).distinct().localCheckpoint(eager=True)
-        old = table.read_version_for_keys(pre_version, keys_df)
-    else:
-        old = table.read_version_raw(pre_version)
-    types = {f["name"]: f["type"] for f in table.current_fields}
-    avail = set(old.columns)
-    pre_cols = []
-    for c in ready.columns:
-        if c == key:
-            pre_cols.append(F.col(key))
-        elif c == "commit_ts":
-            # far below any real commit-ts (the binlog contract keeps real
-            # ts nonnegative; −2^62 also survives any start_ts arithmetic)
-            pre_cols.append(F.lit(-(1 << 62)).cast("long").alias("commit_ts"))
-        elif c == "seq":
-            pre_cols.append(F.lit(0).cast("long").alias("seq"))
-        elif c == "op":
-            pre_cols.append(F.lit("I").alias("op"))
-        elif c in payload and c in avail:
-            pre_cols.append(F.col(c))
-        else:
-            t = types.get(c, dict(ready.dtypes).get(c, "string"))
-            pre_cols.append(F.lit(None).cast(t).alias(c))
-    pre_df = old.filter(~F.col(SYS_DELETED)).select(*pre_cols)
-    return ready.withColumn("_pre", F.lit(False)).unionByName(
-        pre_df.withColumn("_pre", F.lit(True))
-    )
-
-
-def attach_old_value_json(
-    table: LakeTable,
-    ready: DataFrame,
-    pre_version: int,
-    key_json,
-    part_col,
-    n_events: int | None = None,
-) -> DataFrame:
-    """Open-protocol old-value emission, serialize-once: an event's old
-    image IS its predecessor's after-image, so instead of carrying typed
-    old_<col> columns and re-encoding them (attach_old_images → encode_mq
-    would to_json every payload twice), serialize each row's after-image
-    ONCE before the lag window and LAG THE STRING. The window shuffle then
-    carries (key, ts, seq, op, value_json, key_json, partition) — payload
-    columns never cross it — and the post-window plan is a pure projection.
-    Output: (key_json, value_json, old_json, partition, _ots, _oseq), the
-    exact frame ChangeFeed._emit_mq writes for protocol='open'.
-
-    maxwell / canal-json keep the typed attach_old_images path — their old
-    images are structured fields of ONE value document, not a second
-    serialized copy, so there is nothing to share."""
-    from ..operators.lww import op_rank_col
-    from pyspark.sql import Window
-
-    key = table.key_col
-    payload = [f["name"] for f in table.current_fields if f["name"] != key]
-    unioned = _pre_image_union(table, ready, pre_version, payload, n_events)
-    vj = F.when(
-        F.col("op") != "D",
-        F.to_json(F.struct(*[F.col(c) for c in payload])),
-    )
-    narrow = unioned.select(
-        F.col(key),
-        "commit_ts",
-        "seq",
-        "op",
-        "_pre",
-        vj.alias("_vj"),
-        key_json.alias("key_json"),
-        part_col.alias("partition"),
-    )
-    w = Window.partitionBy(key).orderBy(
-        F.col("commit_ts").asc(), F.col("seq").asc(), op_rank_col().asc()
-    )
-    prev_op = F.lag("op").over(w)
-    out = narrow.withColumn(
-        "old_json",
-        F.when(prev_op.isNull() | (prev_op == "D"), F.lit(None)).otherwise(
-            F.lag("_vj").over(w)
-        ),
-    ).filter(~F.col("_pre"))
-    return out.select(
-        "key_json",
-        F.col("_vj").alias("value_json"),
-        "partition",
-        "old_json",
-        F.col("commit_ts").alias("_ots"),
-        F.col("seq").alias("_oseq"),
-    )
-
-
-class ChangeFeed:
     def __init__(
         self,
         table: LakeTable,
@@ -363,82 +121,24 @@ class ChangeFeed:
         contract violation, and the static path pays ZERO extra jobs
         (detection rides the existing per-batch part_stats fold)."""
         self.table = table
-        self.spark = table.spark
-        self.binlog_dir = binlog_dir
-        self.checkpoint_dir = checkpoint_dir
-        self.mode = mode
+        self.tables = {None: table}
+        ddls = [
+            (r["commit_ts"], r["ddl_type"], json.loads(r["spec"]) if isinstance(r["spec"], str) else r["spec"])
+            for r in (ddl_rows or [])
+        ]
+        self.registry = SchemaRegistry([dict(f) for f in table._manifest["schemas"]["0"]], ddls)
+        self.registries = {None: self.registry}
         self.lineage_dir = lineage_dir
-        self.post_batch = post_batch
-        self.pending_dir = pending_dir or os.path.join(checkpoint_dir, "pending")
-        self.max_files_per_trigger = max_files_per_trigger
         self.compact_max_deltas = compact_max_deltas
         self.start_ts = start_ts
         self.strict_watermarks = strict_watermarks
-        self.n_parts = n_parts
-        self.dynamic_spans = dynamic_spans
-        # LWW collapse strategy for the apply path (operators/lww.py):
-        #   "bucket_window" (default) — single payload shuffle fused with
-        #     the bucketed write (lww_collapse_prearranged); fastest plan.
-        #   "agg" — max_by with map-side partial aggregation; the choice for
-        #     feeds with adversarial per-key skew (a hot region's key
-        #     collapses across all input tasks BEFORE the shuffle).
-        #   "semijoin" / "salted" — rank-only shuffle + join-back / explicit
-        #     two-phase salted reduce (kept for comparison + extreme skew).
-        if collapse not in ("bucket_window", "agg", "semijoin", "salted"):
-            raise ValueError(f"unknown collapse strategy {collapse!r}")
-        self.collapse = collapse
-        # MQ sink (cdc/sink/mq.go:165-226): when set, each batch's released
-        # events are ALSO emitted as Open-Protocol (key_json, value_json)
-        # messages under mq_dir/batch-N/partition=P (P = index-value
-        # dispatcher hash of the handle key — per-key ordering within a
-        # partition), plus one resolved-ts message per partition
-        # (json.go:332-369 broadcast) so a consumer can advance its frontier.
-        self.mq_dir = mq_dir
-        self.mq_partitions = mq_partitions
+        # LWW collapse strategy for the apply path (engine.replay.COLLAPSE):
+        # "bucket_window" (default, fastest plan) or "agg" (adversarial
+        # per-key skew: a hot region's key collapses map-side)
+        self.collapse = check_collapse(collapse)
         # partition routing rule for MQ emission (§2.10): "index-value"
         # (default — per-key ordering), "table", "ts", or "default"
         self.mq_dispatch_rule = mq_dispatch_rule
-        # value encoding for MQ emission — the `protocol=` sink-uri option
-        # (cdc/sink/mq.go:356-378 newMqSink → codec dispatch): "open"
-        # (default), "canal-json", "maxwell", "avro", "canal-pb". Meta
-        # messages (resolved, DDL) stay open-JSON on every protocol — the
-        # reference's canal/avro pipelines carry resolved/DDL out-of-band
-        # too (avro: schema registry; canal: no watermark concept at all).
-        if mq_protocol not in ("open", "canal-json", "maxwell", "avro", "canal-pb"):
-            raise ValueError(f"unknown mq_protocol {mq_protocol!r}")
-        self.mq_protocol = mq_protocol
-        self._avro_registry = None  # lazily created; subject-versions stable per feed
-        # enable-old-value (cdc/model/changefeed.go EnableOldValue; maxwell
-        # and canal REQUIRE it in the reference): every emitted event also
-        # carries its pre-change image. In-batch pre-images come from a lag
-        # window; each batch's first event per key reads the pre-batch
-        # snapshot, bucket-pruned to the batch's touched buckets — IO ∝
-        # change rate + touched-bucket state, never table size.
-        if mq_old_value and mq_protocol not in ("open", "maxwell", "canal-json"):
-            raise ValueError(
-                "mq_old_value supports protocols: open, maxwell, canal-json"
-            )
-        self.mq_old_value = mq_old_value
-        if mq_old_value:
-            # pre-image reads are key-pruned via per-file key blooms; turn
-            # the sidecar on so every commit this feed makes is prunable
-            table.set_key_blooms(True)
-        # MQ message framing: "row" = one message per event (the unframed
-        # logical view); "sized" = the reference's ACTUAL kafka wire form —
-        # open-protocol batch messages split greedily at max-batch-size
-        # events / max-message-bytes bytes (json.go:38-41, 394-418). The
-        # batch layout is open-protocol v1 specific; old_value rides extra
-        # columns the frame has no slot for.
-        if mq_framing not in ("row", "sized"):
-            raise ValueError(f"unknown mq_framing {mq_framing!r}")
-        if mq_framing == "sized" and (mq_protocol != "open" or mq_old_value):
-            raise ValueError(
-                "mq_framing='sized' requires mq_protocol='open' without "
-                "old value (the v1 batch frame carries only key/value)"
-            )
-        self.mq_framing = mq_framing
-        self.mq_max_batch_size = mq_max_batch_size
-        self.mq_max_message_bytes = mq_max_message_bytes
         # GC cadence (owner safepoint advance, cdc/owner.go:752-795): when
         # set, each batch expires snapshots beyond the last N — bounds
         # metadata + orphan data growth on a long-running feed. Off by
@@ -459,827 +159,126 @@ class ChangeFeed:
         # Events beyond target_ts are outside the replication window — never
         # applied, never carried in the pending tail.
         self.target_ts = target_ts
-        self.finished = False
-        # admin registry gate (streaming/admin.py — pause/resume/remove):
-        # a feed in any non-`normal` state processes nothing; processing
-        # errors are reported back as state=failed with error history.
-        self.admin = admin
-        self.admin_feed = feed_name
-        # Changefeed identity (ChangeFeedInfo id analog): epoch ids must be
-        # unique per FEED, not just per batch — Structured Streaming batch
-        # ids restart at 0 for a new checkpoint, so a second feed over the
-        # same table would otherwise collide with (and be swallowed by) the
-        # first feed's committed epochs. Same checkpoint → same feed id →
-        # replay idempotence is preserved.
-        import hashlib
+        super().__init__(
+            table.spark, binlog_dir, checkpoint_dir, mode=mode,
+            max_files_per_trigger=max_files_per_trigger, pending_dir=pending_dir,
+            n_parts=n_parts, dynamic_spans=dynamic_spans, collapse_overrides={},
+            mq_dir=mq_dir, mq_partitions=mq_partitions, mq_protocol=mq_protocol,
+            mq_old_value=mq_old_value, mq_framing=mq_framing,
+            mq_max_batch_size=mq_max_batch_size,
+            mq_max_message_bytes=mq_max_message_bytes, admin=admin,
+            feed_name=feed_name, post_batch=post_batch,
+        )
 
-        self.feed_id = hashlib.md5(
-            os.path.abspath(checkpoint_dir).encode()
-        ).hexdigest()[:8]
-        base = [dict(f) for f in table._manifest["schemas"]["0"]]
-        ddls = [
-            (r["commit_ts"], r["ddl_type"], json.loads(r["spec"]) if isinstance(r["spec"], str) else r["spec"])
-            for r in (ddl_rows or [])
+    # ---------- feed hooks ----------
+    def _stream_schema(self) -> T.StructType:
+        """Raw mode: the raw envelope. Typed mode reads with meta cols + the
+        FINAL registry version's payload fields: files written before an
+        add_column read as NULL. (widen/rename need raw mode — a single
+        physical schema can't carry two names/types for one field.)"""
+        if self.mode == "raw":
+            return RAW_BINLOG_SCHEMA
+        meta = [f for f in BINLOG_SCHEMA.fields if f.name in
+                ("commit_ts", "seq", "table", "op", "doc_id", "part", "schema_version")]
+        payload = [
+            T.StructField(f["name"], T._parse_datatype_string(f["type"]))
+            for f in self.registry.fields(len(self.registry.versions) - 1)
+            if f["name"] != "doc_id"
         ]
-        self.registry = SchemaRegistry(base, ddls)
-        _wipes = ("truncate_table", "drop_partition", "truncate_partition")
-        if self.mq_old_value and any(
-            k in self.registry.ddl_kinds for k in _wipes
-        ):
-            # the reference gets old values from TiKV, so they stay
-            # consistent across a truncate/partition-drop; we RECONSTRUCT
-            # them from table state + the lag window, and neither sees the
-            # wipe — refuse loudly rather than emit stale pre-images
-            raise ValueError(
-                "mq_old_value cannot be combined with a data-wiping DDL "
-                "(truncate_table / drop_partition / truncate_partition): "
-                "reconstructed pre-images would span the wipe"
-            )
-        self.batch_summaries: list[dict] = []
-        # set when processing halts for a LIFECYCLE reason (paused/removed/
-        # finished) rather than an error: run_available treats the resulting
-        # stream termination as a clean stop, and no failed-state is recorded
-        self._stop_reason: str | None = None
+        return T.StructType(payload + meta)
 
-    # ---------- pending tail ----------
-    # A batch's tail is written under pending/batch-<id>; the PREVIOUS
-    # batch's dir is kept (not just the newest) so a crash-replay of batch
-    # N can re-read the exact pending input it consumed the first time —
-    # those events are below N's frontier and gone from N's file input, so
-    # without them a replayed old-value emission would lose messages and
-    # shift pre-images. A batch with no tail writes an empty marker dir:
-    # "latest dir below my id" is then always the right (possibly empty)
-    # answer, never an already-consumed older tail.
-    def _pending_dirs(self) -> list[tuple[int, str]]:
-        if not os.path.isdir(self.pending_dir):
-            return []
-        out = []
-        for d in sorted(os.listdir(self.pending_dir)):
-            if d.startswith("batch-"):
-                out.append((int(d.split("-")[1]), os.path.join(self.pending_dir, d)))
-        return out
-
-    def _read_pending(self, batch_id: int) -> DataFrame | None:
-        below = [(i, p) for i, p in self._pending_dirs() if i < batch_id]
-        if not below:
-            return None
-        _, path = max(below)
-        if not any(f.endswith(".parquet") for f in os.listdir(path)):
-            return None  # empty marker: that batch had no tail
-        schema = RAW_BINLOG_SCHEMA if self.mode == "raw" else self._typed_stream_schema()
-        return self.spark.read.schema(schema).parquet(path)
-
-    def _write_tail(self, tail: DataFrame, batch_id: int, had_rows: bool) -> None:
-        out = os.path.join(self.pending_dir, f"batch-{batch_id:010d}")
-        if had_rows:
-            # repartition, not coalesce: coalesce(4) would collapse the wide
-            #-row scan itself to 4 tasks; a shuffle of the (small) tail is
-            # cheaper than an 8x-less-parallel scan.
-            # dropDuplicates: a crash-replayed batch reads its own prior
-            # tail from pending AND the same events from the batch input —
-            # without this the rewritten tail doubles every row, and the
-            # NEXT batch's old-value lag window would see each tail event
-            # preceded by its own copy (wrong pre-image). An event is
-            # identified by (commit_ts, seq, op, key); the tail is small.
-            tail.dropDuplicates(["commit_ts", "seq", "op", "doc_id"]).repartition(
-                4
-            ).write.mode("overwrite").parquet(out)
-        else:
-            os.makedirs(out, exist_ok=True)
-        keep = {f"batch-{batch_id:010d}", f"batch-{batch_id - 1:010d}"}
-        for d in (os.listdir(self.pending_dir) if os.path.isdir(self.pending_dir) else []):
-            if d.startswith("batch-") and d not in keep:
-                shutil.rmtree(os.path.join(self.pending_dir, d), ignore_errors=True)
-
-    # ---------- per-batch replay metadata ----------
-    def _load_or_save_batch_meta(
-        self, batch_id: int, prev_resolved: int, pre_version: int
-    ) -> tuple[int, int]:
-        """Persist (prev_resolved, pre_version) for this batch id BEFORE any
-        merge; on a crash-replay of the same batch, return the recorded pair
-        instead of the (already-advanced) live state. Written write-once
-        with an atomic rename; older records are pruned (only the current
-        batch can ever replay — Structured Streaming commits strictly in
-        order)."""
-        import json as _json
-
-        mdir = os.path.join(self.checkpoint_dir, "batchmeta")
-        path = os.path.join(mdir, f"{batch_id:010d}.json")
-        if os.path.exists(path):
-            with open(path) as f:
-                rec = _json.load(f)
-            return int(rec["prev_resolved"]), int(rec["pre_version"])
-        os.makedirs(mdir, exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(
-                {"prev_resolved": prev_resolved, "pre_version": pre_version}, f
-            )
-        os.replace(tmp, path)
-        for d in os.listdir(mdir):
-            if d.endswith(".json") and d != f"{batch_id:010d}.json":
-                os.remove(os.path.join(mdir, d))
-        return prev_resolved, pre_version
-
-    # ---------- the micro-batch ----------
-    def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        import time as _time
-
-        # Lifecycle gate, checked per micro-batch (the processor watches the
-        # feed info key for admin jobs, owner.go:995-1027). Raising BEFORE
-        # any work stops the stream WITHOUT committing this batch's offsets,
-        # so a later resume replays it — never skips it.
-        if self.finished:
-            self._stop_reason = "finished"
-            raise RuntimeError(
-                f"changefeed {self.admin_feed or self.feed_id} finished at "
-                f"target_ts={self.target_ts} (owner.go:938-946)"
-            )
-        if self.admin is not None and self.admin_feed:
-            from .admin import STATE_NORMAL
-
-            st = self.admin.state(self.admin_feed)
-            if st != STATE_NORMAL:
-                self._stop_reason = st
-                raise RuntimeError(
-                    f"changefeed {self.admin_feed} is {st}; processing "
-                    "halted (owner.go:995-1027)"
-                )
-
-        timings: dict[str, float] = {}
-        t0 = _time.time()
-        pending = self._read_pending(batch_id)
-        events = batch_df.unionByName(pending) if pending is not None else batch_df
+    def _select(self, events: DataFrame) -> DataFrame:
         if self.start_ts is not None:
             # pre-start events belong to the bootstrap snapshot (§3.1)
             events = events.filter(F.col("commit_ts") > F.lit(self.start_ts))
-        # NO persist: the wide-row columnar cache build costs more than the
-        # re-scans it saves (part_stats and the tail probe are column-pruned
-        # by Catalyst; only the apply and the tail write read full rows).
-        try:
-            # 2. watermark advance (monotone via stored max). prev_resolved
-            # is the frontier persisted by earlier batches — NEW events at or
-            # below it violate the puller contract (late arrivals; the
-            # carried-over pending tail is by construction above it).
-            stored0 = {int(k): int(v) for k, v in self.table.part_watermarks.items()}
-            retired_pos = {
-                int(k): v for k, v in self.table.retired_positions.items()
-            }
-            retired0 = set(retired_pos)
-            # seed the full span universe when declared: an unseen part
-            # pins the frontier at -1 until it reports (frontier-initialized-
-            # with-all-spans semantics, cdc/puller/frontier). Spans retired
-            # by split/merge have left the universe and never re-seed.
-            for p_ in range(self.n_parts or 0):
-                if p_ not in retired0:
-                    stored0.setdefault(p_, -1)
-            prev_resolved = min(stored0.values()) if stored0 else -1
-            # table version BEFORE this batch's merges — the old-value MQ
-            # mode reads pre-images from this snapshot (emission runs after
-            # the apply, so `current` already contains the batch).
-            # BOTH values are persisted per batch id before any merge: a
-            # crash between the merge commits and the streaming checkpoint
-            # commit replays this batch with the table already advanced, so
-            # the live state would (a) count the whole batch as late —
-            # false panic — and (b) hand old-value emission the POST-batch
-            # snapshot, silently corrupting every replayed pre-image.
-            prev_resolved, pre_version = self._load_or_save_batch_meta(
-                batch_id, prev_resolved, self.table.version
-            )
-            # resolved-ts control events (op='R', model.OP_RESOLVED) advance
-            # their part's frontier through max_ts exactly like a data
-            # event's max would, but are NOT rows: they never count as
-            # late (a stale heartbeat is ignored — the fold is monotone),
-            # never as events, and are dropped from the stream after this
-            # fold (their promise persists via the stored watermarks)
-            # span-topology control events (op='S'/'M', model.TOPOLOGY_OPS)
-            # carry NO stream position: commit_ts/seq order them against
-            # each other only — positions always derive from checkpoint
-            # state (kv-client resubscribe-at-checkpoint). Excluding them
-            # from max/min keeps a merge event from advancing its child
-            # span past still-lagging parents.
-            from ..model import OP_MERGE, OP_SPLIT, TOPOLOGY_OPS
+        return events
 
-            _is_topo = F.col("op").isin(list(TOPOLOGY_OPS))
-            _is_pos = ~_is_topo
-            _is_data = ~F.col("op").isin(["R", *TOPOLOGY_OPS])
-            part_stats = (
-                events.groupBy("part")
-                .agg(
-                    F.max(F.when(_is_pos, F.col("commit_ts"))).alias("max_ts"),
-                    F.min(F.when(_is_pos, F.col("commit_ts"))).alias("min_ts"),
-                    F.max(F.when(_is_data, F.col("commit_ts"))).alias("data_max_ts"),
-                    F.sum(F.when(_is_topo, 1).otherwise(0)).alias("topo"),
-                    F.sum(F.when(_is_data, 1).otherwise(0)).alias("cnt"),
-                    F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("dels"),
-                    F.sum(
-                        F.when(
-                            _is_data
-                            & (F.col("commit_ts") <= F.lit(prev_resolved)),
-                            1,
-                        ).otherwise(0)
-                    ).alias("late"),
-                    F.sum(
-                        F.when(
-                            _is_data,
-                            schema_version_violation(self.registry.ddl_ts),
-                        ).otherwise(0)
-                    ).alias("sv_viol"),
-                )
-                .collect()
-            )
-            timings["part_stats"] = _time.time() - t0
-            t0 = _time.time()
-            n_late = sum(int(r["late"]) for r in part_stats)
-            _data_op_ddl = any(
-                k in ("truncate_table", "drop_partition", "truncate_partition")
-                for k in self.registry.ddl_kinds
-            )
-            if n_late and (
-                self.strict_watermarks or self.mq_old_value or _data_op_ddl
-            ):
-                # old-value mode cannot tolerate late events even when the
-                # feed otherwise could: LWW makes a late event harmless for
-                # table STATE, but the pre-image attached to every already-
-                # emitted later event would have been wrong — fail loudly
-                # rather than emit silently-corrupt old values
-                raise RuntimeError(
-                    f"late-event contract violated: {n_late} events at or below "
-                    f"resolved frontier {prev_resolved} (puller.go:163-168"
-                    + (", required by enable-old-value)" if self.mq_old_value
-                       else (", required by barrier-ordered data DDL — pass "
-                             "n_parts so the frontier covers the span "
-                             "universe)" if _data_op_ddl else ")"))
-                )
-            n_sv = sum(int(r["sv_viol"]) for r in part_stats)
-            if n_sv:
-                raise RuntimeError(
-                    f"schema_version contract violated: {n_sv} events stamped with a "
-                    "version above version_at(commit_ts) — the mounter's version "
-                    "hint would silently drop them (mounter.go:242-247)"
-                )
-            # span topology: collect the (tiny) control-row set only when the
-            # stats fold saw one — static feeds pay nothing
-            n_topo = sum(int(r["topo"]) for r in part_stats)
-            topo_rows: list = []
-            if n_topo:
-                if not self.dynamic_spans:
-                    raise RuntimeError(
-                        f"{n_topo} span-topology events (op S/M) in a feed "
-                        "created without dynamic_spans=True — a static span "
-                        "universe cannot split/merge (kv/client.go region-"
-                        "change contract)"
-                    )
-                topo_rows = sorted(
-                    events.filter(_is_topo)
-                    .select("commit_ts", "seq", "op", "part", "doc_id")
-                    .collect(),
-                    key=lambda r: (int(r["commit_ts"]), int(r["seq"])),
-                )
-            # spans retiring in THIS batch: their data rows are legal (the
-            # stream ends at the topology event, which takes effect at the
-            # end of the batch) — also exactly what a crash-replay of the
-            # topology batch re-delivers
-            batch_retiring: set[int] = set()
-            for r in topo_rows:
-                if r["op"] == OP_SPLIT:
-                    batch_retiring.add(int(r["part"]))
-                else:
-                    batch_retiring.update(
-                        int(x) for x in str(r["doc_id"]).split(",")
-                    )
-            # data on a retired span is legal UP TO its retirement
-            # checkpoint (the carried tail re-delivers in-flight pre-split
-            # rows); data ABOVE it can never arrive — the old region's
-            # stream ended there (kv/client.go region-change contract)
-            bad = sorted(
-                int(r["part"])
-                for r in part_stats
-                if int(r["part"]) in retired0
-                and int(r["part"]) not in batch_retiring
-                and r["data_max_ts"] is not None
-                and int(r["data_max_ts"]) > retired_pos[int(r["part"])]
-            )
-            if bad:
-                raise RuntimeError(
-                    f"data events above the retirement checkpoint on retired "
-                    f"span(s) {bad}: the old region's stream ended at its "
-                    "split/merge (kv/client.go region-change contract)"
-                )
-            stored = dict(stored0)
-            for r in part_stats:
-                p = int(r["part"])
-                if r["max_ts"] is None:
-                    continue  # topology-only part: no position to fold
-                if p in retired0 and p not in batch_retiring:
-                    continue  # stale heartbeat racing a committed retirement
-                stored[p] = max(stored.get(p, -1), int(r["max_ts"]))
-            # apply topology (ordered among themselves; end-of-batch effect)
-            retired_new: dict[int, int] = {}  # part -> retirement checkpoint
-            for r in topo_rows:
-                spec = [int(x) for x in str(r["doc_id"]).split(",")]
-                if r["op"] == OP_SPLIT:
-                    parent = int(r["part"])
-                    pos = stored.pop(parent, -1)
-                    if parent in retired0:
-                        # replayed topology batch: keep the committed
-                        # retirement checkpoint (the fold above may have
-                        # re-derived a smaller one from a partial replay)
-                        pos = max(pos, retired_pos[parent])
-                    retired_new[parent] = pos
-                    for c in spec:
-                        if c in retired0 or c in retired_new:
-                            raise RuntimeError(
-                                f"split child span {c} is retired — span ids "
-                                "are never reused"
-                            )
-                        # resubscribe-at-checkpoint: children inherit the
-                        # parent's position as a floor (max keeps replay
-                        # idempotent when children have already advanced)
-                        stored[c] = max(stored.get(c, -1), pos)
-                else:
-                    child = int(r["part"])
-                    if child in retired0 or child in retired_new:
-                        raise RuntimeError(
-                            f"merge target span {child} is retired — span "
-                            "ids are never reused"
-                        )
-                    # merged region resubscribes at the frontier of its
-                    # union span = min over constituent checkpoints; each
-                    # parent retires at ITS OWN final position
-                    seed = None
-                    for p in spec:
-                        pos = stored.pop(p, -1)
-                        if p in retired0:
-                            pos = max(pos, retired_pos[p])
-                        retired_new[p] = pos
-                        seed = pos if seed is None else min(seed, pos)
-                    stored[child] = max(stored.get(child, -1), seed if seed is not None else -1)
-            resolved_raw = min(stored.values()) if stored else -1
-            # target_ts clamp: the checkpoint stops AT target_ts
-            # (owner.go:940 `status.CheckpointTs == info.GetTargetTs()`);
-            # events beyond it are outside the replication window.
-            resolved = (
-                min(resolved_raw, self.target_ts)
-                if self.target_ts is not None
-                else resolved_raw
-            )
-            watermarks = {str(k): v for k, v in stored.items()}
-            for p, pos in retired_new.items():
-                # sentinel: _finalize_commit drops the span from the
-                # persisted universe and records its final checkpoint (the
-                # carried tail may still re-deliver data at or below it)
-                watermarks[str(p)] = {"retired_at": int(pos)}
+    def _meta(self, batch_id, prev_resolved, spans):
+        # table version BEFORE this batch's merges — the old-value MQ mode
+        # reads pre-images from this snapshot (emission runs after the
+        # apply, so `current` already contains the batch)
+        rec = batch_meta(self.checkpoint_dir, batch_id, {
+            "prev_resolved": prev_resolved, "pre_version": self.table.version,
+        })
+        return int(rec["prev_resolved"]), spans, {None: int(rec["pre_version"])}
 
-            # 3. releasable prefix / carried tail (control events dropped:
-            # their watermark contribution is already persisted above)
-            data = events.filter(_is_data)
-            ready = data.filter(F.col("commit_ts") <= F.lit(resolved))
-            tail = data.filter(F.col("commit_ts") > F.lit(resolved))
-            if self.target_ts is not None:
-                # beyond-target events are DROPPED, not carried: the
-                # reference puller subscribes [start_ts, target_ts) and
-                # simply never emits them; carrying them would grow the
-                # pending tail forever on a finished feed.
-                tail = tail.filter(F.col("commit_ts") <= F.lit(self.target_ts))
-
-            # 3b. cyclic replication: stamp origins from the source
-            # cluster's mark table, drop echoes, refuse loopbacks. Runs on
-            # the released prefix only — echoes still advance watermarks
-            # (they are real stream positions), they just don't re-apply.
-            if self.cyclic and self.cyclic.get("source_marks_dir"):
-                from ..operators.cyclic import (
-                    filter_echoes,
-                    loopback_check,
-                    read_marks,
-                )
-
-                marks = read_marks(self.spark, self.cyclic["source_marks_dir"])
-                n_loop = loopback_check(ready, marks, self.cyclic["replica_id"])
-                if n_loop:
-                    raise RuntimeError(
-                        f"cyclic loopback detected: {n_loop} events marked with "
-                        f"the local replica id {self.cyclic['replica_id']} "
-                        "(pkg/cyclic/filter.go:49-53)"
-                    )
-                ready = filter_echoes(
-                    ready,
-                    marks,
-                    self.cyclic["replica_id"],
-                    self.cyclic.get("filter_replica_ids", []),
-                )
-
-            # 4. DDL barriers inside the releasable range. Boundaries are
-            # ALL configured DDL ts ≤ resolved — independent of execution
-            # state — so slice indexing (hence epoch ids) is stable across
-            # mid-batch crash replays: if the driver dies between a DDL's
-            # schema commit and the next slice's merge, the replayed batch
-            # must re-slice IDENTICALLY or a post-DDL range would land in a
-            # slice index whose epoch already committed covering a smaller
-            # range and be silently skipped.
-            barriers = [
-                (i + 1, ts)
-                for i, ts in enumerate(self.registry.ddl_ts)
-                if ts <= resolved
-            ]
-            slices: list[tuple[int | None, int | None]] = []
-            lo = None
-            for ver, ts in barriers:
-                slices.append((lo, ts))
-                lo = ts
-            slices.append((lo, None))
-
-            # min event ts in the batch — used to skip provably-empty
-            # leading slices (barriers executed in PRIOR batches) without an
-            # epoch commit. Derived from the batch's data, so identical on
-            # replay; bounds per-batch slice work to new-DDLs + 1.
-            lo_evt = min(
-                (
-                    int(r["min_ts"])
-                    for r in part_stats
-                    if r["min_ts"] is not None
-                ),
-                default=None,
-            )
-            epoch_stats = []
-            for k, (slo, shi) in enumerate(slices):
-                provably_empty = (
-                    lo_evt is None
-                    or lo_evt > resolved
-                    or (shi is not None and shi < lo_evt)
-                )
-                if not provably_empty:
-                    sl = ready
-                    if slo is not None:
-                        sl = sl.filter(F.col("commit_ts") > F.lit(slo))
-                    if shi is not None:
-                        sl = sl.filter(F.col("commit_ts") <= F.lit(shi))
-                    epoch_id = f"cf-{self.feed_id}-{batch_id:010d}-s{k}"
-                    st = self._apply_slice(
-                        sl, epoch_id, watermarks, hi_ts=shi if shi is not None else resolved
-                    )
-                    epoch_stats.append((epoch_id, st))
-                if shi is not None:
-                    ver = self.registry.ddl_ts.index(shi) + 1
-                    if self.table.schema_version < ver:
-                        # advance lake schema to `ver` (metadata-only commit;
-                        # guarded so a crash-replay never re-diffs an
-                        # already-advanced schema backwards). truncate_table
-                        # wipes every bucket AND bumps the version in one
-                        # atomic manifest commit (idempotent by epoch id).
-                        kind = self.registry.ddl_kinds[ver - 1]
-                        dspec = self.registry.ddl_specs[ver - 1]
-                        if kind == "truncate_table":
-                            self.table.update_schema(
-                                "truncate_table", {}, f"ddl-{shi}"
-                            )
-                        elif kind in (
-                            "add_partition", "drop_partition",
-                            "truncate_partition",
-                        ):
-                            # partition ops (schema_storage.go:586-624):
-                            # drop/truncate tombstone the partition's rows
-                            # at the barrier (idempotent data epoch), then
-                            # the version bump keeps registry/lake lockstep
-                            if kind != "add_partition":
-                                self.table.delete_where(
-                                    dspec["where"], shi, f"ddl-{shi}#del"
-                                )
-                            self.table.update_schema(kind, dspec, f"ddl-{shi}")
-                        else:
-                            self._advance_lake_schema(
-                                ver, self.registry.fields(ver), f"ddl-{shi}"
-                            )
-            # topology batches force a watermark commit even when no slice
-            # merged (a topology-only batch is provably empty of data): the
-            # retirement must outlive the consumed source file. Idempotent
-            # by epoch id; when slices DID merge this dedupes the same info.
-            if topo_rows:
-                self.table.advance_watermarks(
-                    watermarks, f"cf-{self.feed_id}-{batch_id:010d}-topo"
-                )
-            elif not epoch_stats and any(
-                int(v) > int(stored0.get(p, -1)) for p, v in stored.items()
-            ):
-                # heartbeat-persisted frontier: a batch provably empty of
-                # releasable data commits no epoch, yet resolved-ts control
-                # rows may still have advanced span positions — and control
-                # rows, unlike the data tail (persisted in pending/), are
-                # consumed by the source and never re-read. Persist the
-                # advance (metadata-only, idempotent by epoch id) or the
-                # frontier rolls back on restart; the reference checkpoints
-                # forwarded resolved-ts (processor position / puller
-                # frontier, cdc/processor/processor.go).
-                self.table.advance_watermarks(
-                    watermarks, f"cf-{self.feed_id}-{batch_id:010d}-wm"
-                )
-            # MQ DDL messages: EVERY barrier ≤ resolved, not just the ones
-            # executed in this attempt — a crash between the schema commit
-            # and emission would otherwise lose the DDL downstream forever.
-            # Re-emission across batches is safe: the consumer's field-id
-            # diff is a no-op once its table has advanced.
-            executed_ddls = [
-                (
-                    ts,
-                    self.registry.fields(ver),
-                    self.registry.ddl_kinds[ver - 1],
-                    self.registry.ddl_specs[ver - 1],
-                )
-                for ver, ts in barriers
-            ]
-            timings["apply"] = _time.time() - t0
-            t0 = _time.time()
-
-            # 4a'. cyclic write side (mark.go): one mark row per applied
-            # txn, carrying its origin (the stamp when source marks exist,
-            # else the source replica id). Idempotent per batch id.
-            if self.cyclic and self.cyclic.get("marks_dir"):
-                from ..operators.cyclic import mark_rows, write_marks
-
-                origin = (
-                    "origin_replica"
-                    if "origin_replica" in ready.columns
-                    else self.cyclic["replica_id"]
-                )
-                write_marks(
-                    mark_rows(ready, origin), self.cyclic["marks_dir"], batch_id
-                )
-
-            # 4b. MOR hygiene: fold deltas when a bucket accumulates too many
-            self.table.maybe_compact(self.compact_max_deltas)
-            # old-value emission reads the pre-batch snapshot — GC must wait
-            # until after it (a batch with many slices could otherwise push
-            # pre_version beyond keep_last and delete its files mid-batch)
-            if self.expire_keep_last is not None and not self.mq_old_value:
-                self.table.expire_versions(keep_last=self.expire_keep_last)
-            timings["compact"] = _time.time() - t0
-            t0 = _time.time()
-
-            # 4c. optional MQ emission of the released prefix
-            if self.mq_dir is not None:
-                self._emit_mq(
-                    ready, batch_id, resolved, executed_ddls, pre_version,
-                    n_events=sum(int(r["cnt"]) for r in part_stats),
-                )
-                timings["mq"] = _time.time() - t0
-                t0 = _time.time()
-            if self.expire_keep_last is not None and self.mq_old_value:
-                # floor: keep back to pre_version — a crash after this
-                # expire but before the streaming checkpoint commit replays
-                # the batch, and the replayed emission must still be able to
-                # read the pre-batch snapshot
-                self.table.expire_versions(
-                    keep_last=max(
-                        self.expire_keep_last,
-                        self.table.version - pre_version + 1,
-                    )
-                )
-
-            # 5. persist tail for the next batch. Existence is known from
-            # part_stats (tail nonempty ⟺ some partition's max is above the
-            # global min) — no extra probe job.
-            had_tail = any(
-                r["max_ts"] is not None and int(r["max_ts"]) > resolved
-                for r in part_stats
-            )
-            self._write_tail(tail, batch_id, had_rows=had_tail)
-            timings["tail"] = _time.time() - t0
-            t0 = _time.time()
-
-            # 6. lineage
-            if self.lineage_dir:
-                self._write_lineage(batch_id, epoch_stats, part_stats, resolved)
-            timings["lineage"] = _time.time() - t0
-            self.batch_summaries.append(
-                {
-                    "batch_id": batch_id,
-                    "resolved_ts": resolved,
-                    "slices": len(slices),
-                    "events": sum(int(r["cnt"]) for r in part_stats),
-                    **(
-                        {"span_changes": n_topo, "spans_retired": sorted(retired_new)}
-                        if n_topo
-                        else {}
-                    ),
-                    "timings": {k: round(v, 3) for k, v in timings.items()},
-                }
-            )
-            # status write + finish detection (owner.go:938-946): once the
-            # raw frontier reaches target_ts, everything within the window
-            # has been released and applied — the feed is done.
-            if self.post_batch is not None:
-                self.post_batch(self.batch_summaries[-1])
-            if self.admin is not None and self.admin_feed:
-                self.admin.update_checkpoint(self.admin_feed, int(resolved))
-            if self.target_ts is not None and resolved_raw >= self.target_ts:
-                self.finished = True
-                if self.admin is not None and self.admin_feed:
-                    self.admin.finish(self.admin_feed)
-        except Exception as e:
-            # real processing error → StateFailed with error history; a
-            # lifecycle stop (pause/remove/finish raised above) is not a
-            # failure and must not clobber the feed's state
-            if (
-                self.admin is not None
-                and self.admin_feed
-                and self._stop_reason is None
-            ):
-                self.admin.set_failed(self.admin_feed, f"{type(e).__name__}: {e}")
-            raise
-
-    def _advance_lake_schema(self, ver: int, fields_next: list[dict], epoch_id: str) -> None:
-        advance_lake_schema(self.table, fields_next, epoch_id)
-
-    def _apply_slice(
-        self,
-        sl: DataFrame,
-        epoch_id: str,
-        watermarks: dict,
-        hi_ts: int | None = None,
-    ) -> dict:
-        target_ver = self.table.schema_version
-        # version hint from the slice's upper commit-ts bound: every version
-        # at or below version_at(hi_ts) may appear, later ones cannot —
-        # skips the mounter's per-slice distinct() job (empty versions only
-        # add an empty union branch)
-        hint = None
-        if hi_ts is not None and len(self.registry.versions) > 1:
-            hint = list(range(0, self.registry.version_at(hi_ts) + 1))
-        if self.mode == "raw":
-            mounted = mount_raw(sl, self.registry, target_ver, versions_present=hint)
-        else:
-            mounted = mount_typed(sl, self.registry, target_ver, versions_present=hint)
-        key = self.table.key_col
-        payload = [f["name"] for f in self.table.current_fields if f["name"] != key]
-        events = mounted.select(key, "op", "commit_ts", "seq", *payload)
-        # LWW collapse per the configured strategy (see __init__); the
-        # default fuses the collapse shuffle with the bucketed MOR write —
-        # one payload exchange per epoch, no join, no second sort.
-        if self.collapse == "bucket_window":
-            from ..operators.lww import lww_collapse_prearranged
-
-            winners = lww_collapse_prearranged(
-                events,
-                self.table._bucket_expr(self.table.bucket_col),
-                self.table.n_buckets,
-                [key],
-            )
-            return self.table.merge_epoch(
-                winners,
-                epoch_id,
-                watermarks=watermarks,
-                assume_deduped=True,
-                prearranged=True,
-            )
-        if self.collapse == "agg":
-            from ..operators.lww import lww_latest_agg
-
-            winners = lww_latest_agg(events, [key])
-        elif self.collapse == "salted":
-            from ..operators.lww import lww_latest_salted
-
-            winners = lww_latest_salted(events, [key])
-        else:
-            winners = lww_latest_semijoin(events, [key])
-        return self.table.merge_epoch(
-            winners, epoch_id, watermarks=watermarks, assume_deduped=True
+    def _part_stats(self, events, prev_resolved, spans):
+        # NEW events at or below the persisted frontier violate the puller
+        # contract (late arrivals; the carried tail is above it)
+        return part_stats(
+            events, ["part"], F.col("commit_ts") <= F.lit(prev_resolved),
+            schema_version_violation(self.registry.ddl_ts),
         )
 
-    def _attach_old_images(
-        self, ready: DataFrame, pre_version: int, n_events: int | None = None
-    ) -> DataFrame:
-        return attach_old_images(self.table, ready, pre_version, n_events=n_events)
+    def _release(self, ready: DataFrame) -> DataFrame:
+        # cyclic replication: stamp origins from the source cluster's mark
+        # table, drop echoes, refuse loopbacks. Runs on the released prefix
+        # only — echoes still advance watermarks (they are real stream
+        # positions), they just don't re-apply.
+        if not (self.cyclic and self.cyclic.get("source_marks_dir")):
+            return ready
+        from ..operators.cyclic import filter_echoes, loopback_check, read_marks
 
-    def _emit_mq(
-        self,
-        ready: DataFrame,
-        batch_id: int,
-        resolved: int,
-        executed_ddls: list | None = None,
-        pre_version: int | None = None,
-        n_events: int | None = None,
-    ) -> None:
-        """Write this batch's messages: data rows encoded per the codec
-        (raw mode: the payload IS the value json; typed mode: to_json of the
-        payload struct), partitioned by the dispatch hash; then one resolved
-        message per partition, written after the data (flush-then-broadcast
-        order, mq.go:187-226)."""
-        from ..functions.codec import KEY_FIELDS
+        marks = read_marks(self.spark, self.cyclic["source_marks_dir"])
+        n_loop = loopback_check(ready, marks, self.cyclic["replica_id"])
+        if n_loop:
+            raise RuntimeError(
+                f"cyclic loopback detected: {n_loop} events marked with "
+                f"the local replica id {self.cyclic['replica_id']} "
+                "(pkg/cyclic/filter.go:49-53)"
+            )
+        return filter_echoes(
+            ready, marks, self.cyclic["replica_id"],
+            self.cyclic.get("filter_replica_ids", []),
+        )
+
+    def _maintain(self, b: Batch) -> None:
+        # cyclic write side (mark.go): one mark row per applied txn,
+        # carrying its origin (the stamp when source marks exist, else the
+        # source replica id). Idempotent per batch id.
+        if self.cyclic and self.cyclic.get("marks_dir"):
+            from ..operators.cyclic import mark_rows, write_marks
+
+            origin = (
+                "origin_replica"
+                if "origin_replica" in b.ready.columns
+                else self.cyclic["replica_id"]
+            )
+            write_marks(mark_rows(b.ready, origin), self.cyclic["marks_dir"], b.id)
+        # MOR hygiene: fold deltas when a bucket accumulates too many
+        self.table.maybe_compact(self.compact_max_deltas)
+
+    def _finish(self, b: Batch) -> None:
+        if self.expire_keep_last is not None:
+            # after MQ emission, which reads the pre-batch snapshot; in
+            # old-value mode the floor keeps back to pre_version — a crash
+            # before the streaming checkpoint commit replays the batch, and
+            # the replayed emission must still read that snapshot
+            keep = self.expire_keep_last
+            if self.mq_old_value:
+                keep = max(keep, self.table.version - b.pre_versions[None] + 1)
+            self.table.expire_versions(keep_last=keep)
+        if self.lineage_dir:
+            self._write_lineage(b.id, b.applied[None], b.stats, b.resolved)
+
+    def _mq_partition(self, table: LakeTable):
         from .dispatch import dispatcher_for
 
-        key_json = F.to_json(
-            F.struct(*[F.col(c) for c in KEY_FIELDS])
-        ).alias("key_json")
-        if self.mode == "raw":
-            # the consumer decodes every message at the batch-final (post-
-            # DDL) field list, so writer-version payloads must be mounted to
-            # that schema and re-encoded — passing the original payload JSON
-            # through would decode old-name keys to NULL after a rename/widen
-            hint = None
-            if len(self.registry.versions) > 1:
-                hint = list(range(0, self.registry.version_at(resolved) + 1))
-            ready = mount_raw(
-                ready, self.registry, self.table.schema_version, versions_present=hint
-            )
-        from .protocols import encode_mq
+        return dispatcher_for(self.mq_dispatch_rule, self.mq_partitions, key_col="doc_id")
 
-        part = dispatcher_for(
-            self.mq_dispatch_rule, self.mq_partitions, key_col="doc_id"
-        )
-        if self.mq_protocol == "avro" and self._avro_registry is None:
-            from ..functions.avro_schema import AvroSchemaRegistry
-
-            # a DDL in any batch bumps the subject version in this
-            # feed-scoped registry, exactly like avro.go's re-register
-            self._avro_registry = AvroSchemaRegistry()
-        if self.mq_old_value and self.mq_protocol == "open":
-            # serialize-once path: lag the encoded after-image instead of
-            # typed old_<col> columns + a second to_json (see
-            # attach_old_value_json) — halves the encode work of the
-            # old-value leg
-            out = attach_old_value_json(
-                self.table, ready, pre_version, key_json, part,
-                n_events=n_events,
-            )
-        else:
-            if self.mq_old_value:
-                ready = self._attach_old_images(
-                    ready, pre_version, n_events=n_events
-                )
-            out = encode_mq(
-                ready, self.table, self.mq_protocol, key_json, part,
-                avro_registry=self._avro_registry, old_value=self.mq_old_value,
-            )
-        batch_dir = os.path.join(self.mq_dir, f"batch-{batch_id:010d}")
-        from .dispatch import identity_repartition
-
-        if self.mq_framing == "sized":
-            # the reference's kafka wire form: frame per-partition event
-            # runs into size-bounded batch messages; msg_idx is the send
-            # order (the framer's groupBy IS the partition shuffle — no
-            # second exchange)
-            from ..functions.codec import frame_sized_messages
-
-            framed = frame_sized_messages(
-                out, "partition", order_cols=("_ots", "_oseq"),
-                max_batch_size=self.mq_max_batch_size,
-                max_message_bytes=self.mq_max_message_bytes,
-            )
-            framed.sortWithinPartitions("partition", "msg_idx").write.mode(
-                "overwrite"
-            ).partitionBy("partition").parquet(batch_dir)
-        else:
-            # sortWithinPartitions: per-partition delivery order = commit
-            # order (the reference's Kafka contract) — a local sort after
-            # the shuffle, no extra exchange; parquet preserves row order
-            # for the consumer. "partition" leads the sort so the dynamic-
-            # partition writer's required ordering is already satisfied —
-            # it would otherwise inject its own (non-stable) sort and
-            # scramble the ts order back out
-            identity_repartition(out, self.mq_partitions).sortWithinPartitions(
-                "partition", "_ots", "_oseq"
-            ).drop("_ots", "_oseq").write.mode(
-                "overwrite"
-            ).partitionBy("partition").parquet(batch_dir)
-        # resolved-ts broadcast: one tiny driver-side file covering every
-        # partition (consumers take min over partitions, main.go:531-544)
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        res = pa.table(
-            {
-                "partition": pa.array(list(range(self.mq_partitions)), pa.int32()),
-                "key_json": pa.array(
-                    [
-                        json.dumps({"ts": resolved, "type": "resolved"})
-                        for _ in range(self.mq_partitions)
-                    ]
-                ),
-            }
-        )
-        tmp = os.path.join(batch_dir, ".resolved.parquet.tmp")
-        pq.write_table(res, tmp)
-        os.replace(tmp, os.path.join(batch_dir, "resolved.parquet"))
-        # DDL messages (json.go:425-446): value carries the POST-ddl field
-        # list (registry fields with stable ids) so the consumer evolves its
-        # table by field-id diff, exactly like the primary sink
-        for ts, fields_next, kind, dspec in executed_ddls or []:
-            ddl = pa.table(
-                {
-                    "key_json": pa.array([json.dumps({"ts": ts, "type": "ddl"})]),
-                    "value_json": pa.array(
-                        [json.dumps(
-                            {"fields": fields_next, "ddl_type": kind,
-                             "spec": dspec}
-                        )]
-                    ),
-                }
-            )
-            # zero-padded ts: consumers glob-sort these files, and unpadded
-            # ts would apply ddl-100 before ddl-99 lexicographically
-            tmp = os.path.join(batch_dir, f".ddl-{ts:020d}.parquet.tmp")
-            pq.write_table(ddl, tmp)
-            os.replace(tmp, os.path.join(batch_dir, f"ddl-{ts:020d}.parquet"))
+    def _summary(self, b: Batch) -> dict:
+        span = b.spans[None]
+        return {
+            "batch_id": b.id,
+            "resolved_ts": b.resolved,
+            "slices": len(b.barriers[None]) + 1,
+            "events": sum(int(r["cnt"]) for r in b.stats),
+            **(
+                {"span_changes": b.n_topo, "spans_retired": sorted(span.retired_new)}
+                if b.n_topo
+                else {}
+            ),
+        }
 
     def _write_lineage(self, batch_id, epoch_stats, part_stats, resolved) -> None:
         """Driver-side metadata write (32-ish rows/batch): plain pyarrow, no
@@ -1362,67 +361,4 @@ class ChangeFeed:
             # partition (the per-partition resolved-ts lag gauge); the
             # global applied frontier is min(part_max_ts) = part_resolved
             (F.col("global_max") - F.col("part_max_ts")).alias("lag_us"),
-        )
-
-    # ---------- run ----------
-    def _typed_stream_schema(self) -> T.StructType:
-        """Typed mode reads with meta cols + the FINAL registry version's
-        payload fields: files written before an add_column read as NULL.
-        (widen/rename need raw mode — a single physical schema can't carry
-        two names/types for one field.)"""
-        meta = [f for f in BINLOG_SCHEMA.fields if f.name in
-                ("commit_ts", "seq", "table", "op", "doc_id", "part", "schema_version")]
-        payload = [
-            T.StructField(f["name"], T._parse_datatype_string(f["type"]))
-            for f in self.registry.fields(len(self.registry.versions) - 1)
-            if f["name"] != "doc_id"
-        ]
-        return T.StructType(payload + meta)
-
-    def _stream(self) -> DataFrame:
-        schema = RAW_BINLOG_SCHEMA if self.mode == "raw" else self._typed_stream_schema()
-        r = self.spark.readStream.schema(schema)
-        if self.max_files_per_trigger:
-            r = r.option("maxFilesPerTrigger", str(self.max_files_per_trigger))
-        return r.parquet(self.binlog_dir)
-
-    def run_available(self) -> list[dict]:
-        """Process everything currently in the binlog dir (availableNow),
-        then stop. Resumable: the streaming checkpoint + idempotent epochs.
-
-        A feed whose admin state is not ``normal`` (paused/removed/failed)
-        or that already reached ``target_ts`` processes NOTHING — the
-        `cdc cli changefeed pause` contract (owner.go:995-1027). A pause
-        landing mid-run stops the stream cleanly at the next batch boundary
-        without committing that batch (resume replays it)."""
-        self._stop_reason = None
-        if self.finished:
-            return self.batch_summaries
-        if self.admin is not None and self.admin_feed:
-            from .admin import STATE_NORMAL
-
-            if self.admin.state(self.admin_feed) != STATE_NORMAL:
-                return self.batch_summaries
-        q = (
-            self._stream()
-            .writeStream.foreachBatch(self._process_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        except Exception:
-            if self._stop_reason is None:
-                raise  # real failure (already recorded as state=failed)
-        return self.batch_summaries
-
-    def start(self, processing_time: str = "5 seconds"):
-        """Continuous micro-batching (production mode)."""
-        return (
-            self._stream()
-            .writeStream.foreachBatch(self._process_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(processingTime=processing_time)
-            .start()
         )

@@ -93,7 +93,7 @@ class MQConsumer:
             import glob as g
             import json as j
 
-            from .changefeed import advance_lake_schema
+            from .feed import advance_lake_schema
 
             ddl_msgs = []
             for ddl_file in g.glob(os.path.join(bdir, "ddl-*.parquet")):
@@ -218,7 +218,7 @@ class MultiMQConsumer:
         import glob as g
         import json as j
 
-        from .changefeed import advance_lake_schema
+        from .feed import advance_lake_schema
 
         stats = []
         if not os.path.isdir(self.mq_dir):

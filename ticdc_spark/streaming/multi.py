@@ -13,24 +13,37 @@ releasable prefix is routed per table (the table dispatcher, §2.10) and
 LWW-merged into each table's lake independently, with per-table epoch ids —
 a replayed batch re-skips exactly the tables that already committed.
 
-The LWW/merge path is the same one the single-table ChangeFeed uses; this
-class owns only the routing + per-table boundary bookkeeping.
+The per-batch pipeline — pending tail, span frontier fold and topology,
+contract checks, barrier slicing, mount + LWW collapse + idempotent merge,
+MQ emission, lifecycle gate — is the one the single-table ChangeFeed runs
+(streaming.feed.FeedBase over streaming.frontier). What this class owns:
+
+  * per-(table, part) span maps and late thresholds (a broadcast join in
+    the part_stats job), folded into a union release frontier
+  * the known-table filter: another capture's tables ride the tail only
+  * routing: add-boundaries, stop-ts (remove/move-table) and lifecycle
+    windows; table lifecycle DDL (create/drop/recover/rename_table,
+    drop_schema) that grows and shrinks the table set in-stream
+  * its wire form: per-table epoch ids (cfm-<feed>-<batch>-<table>-s<k>),
+    the dispatcher rule set, and per-table MQ DDL files
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..lake.table import LakeTable
 from ..model import BINLOG_SCHEMA
-from ..operators.lww import lww_latest_semijoin
+from .feed import RAW_BINLOG_SCHEMA, Batch, FeedBase, part_stats, schema_version_violation
+from .frontier import SpanMap, batch_meta
 
 
-class MultiTableChangeFeed:
+class MultiTableChangeFeed(FeedBase):
+    by = ("table", "part")
+
     def __init__(
         self,
         tables: dict[str, LakeTable],
@@ -89,7 +102,16 @@ class MultiTableChangeFeed:
         schema versions; supports add/drop DDLs (a single physical column
         cannot carry two names/types, so widen/rename need raw).
         mode="raw": payload is a JSON string decoded per (table, version)
-        by the mounter — every DDL kind supported."""
+        by the mounter — every DDL kind supported.
+
+        n_parts / dynamic_spans: as for ChangeFeed, but per table — the
+        declared universe seeds every table's own span map (gating its
+        data DDLs, not the union release frontier), and a (table, part)
+        span splits/merges within its own table's universe (regions are
+        per-table key ranges in the reference).
+
+        collapse_overrides: table -> LWW collapse ("agg" for tables with
+        adversarial per-key skew; see ChangeFeed.collapse)."""
         if not tables and spark is None:
             # an EMPTY capture is a legal cluster member (the reference's
             # idle capture waiting for the owner to assign tables) — but it
@@ -97,75 +119,10 @@ class MultiTableChangeFeed:
             # borrow one from
             raise ValueError("need at least one table (or spark= for an empty capture)")
         self.tables = dict(tables)
-        self.spark = spark if spark is not None else next(iter(tables.values())).spark
-        self.binlog_dir = binlog_dir
-        self.checkpoint_dir = checkpoint_dir
-        self.pending_dir = os.path.join(checkpoint_dir, "pending")
-        self.max_files_per_trigger = max_files_per_trigger
-        # same contract as ChangeFeed.post_batch: called after the batch's
-        # commits with the summary dict; failures fail the feed and the
-        # replayed batch no-ops under idempotent hooks
-        self.post_batch = post_batch
         self.boundaries = dict(boundaries or {})
-        self.stop_ts = dict(stop_ts or {})
-        self.mode = mode
-        # span universe (see ChangeFeed.n_parts): unseen parts pin the
-        # frontier; required when the DDL stream carries barrier-ordered
-        # data operations
-        self.n_parts = n_parts
-        # accept span-topology control events (op S/M): each (table, part)
-        # span splits/merges within ITS OWN table's universe (regions are
-        # per-table key ranges in the reference) — see ChangeFeed.dynamic_spans
-        self.dynamic_spans = dynamic_spans
-        # per-table LWW collapse strategy override ("agg"/"semijoin") for
-        # tables with adversarial per-key skew; default is the single-
-        # shuffle bucket_window plan (see ChangeFeed.collapse)
-        self.collapse_overrides = dict(collapse_overrides or {})
-        for t, s in self.collapse_overrides.items():
-            if s not in ("bucket_window", "agg", "semijoin"):
-                raise ValueError(f"unknown collapse strategy {s!r} for table {t!r}")
         # multi-table MQ sink: one batch dir shared by every table, rows
-        # routed by the dispatcher rule set (§2.10 switcher — per-table glob
-        # matchers; default index-value keeps per-key ordering)
-        self.mq_dir = mq_dir
-        self.mq_partitions = mq_partitions
+        # routed by the dispatcher rule set
         self.mq_dispatch_rules = list(mq_dispatch_rules or [])
-        # value codec, shared by every table in the feed (protocol= option;
-        # per-table schemas encode independently, outputs union by name)
-        from .protocols import check_protocol
-
-        self.mq_protocol = check_protocol(mq_protocol)
-        # enable-old-value, per table (see ChangeFeed / attach_old_images):
-        # each table's pre-images resolve against ITS pre-batch snapshot
-        if mq_old_value and mq_protocol not in ("open", "maxwell", "canal-json"):
-            raise ValueError(
-                "mq_old_value supports protocols: open, maxwell, canal-json"
-            )
-        self.mq_old_value = mq_old_value
-        if mq_old_value:
-            # key-bloom sidecars make every table's pre-image reads prunable
-            for t in self.tables.values():
-                t.set_key_blooms(True)
-        # batch-framed wire form (see ChangeFeed): one partition's frames
-        # interleave every table's events; consumers unframe then route
-        if mq_framing not in ("row", "sized"):
-            raise ValueError(f"unknown mq_framing {mq_framing!r}")
-        if mq_framing == "sized" and (mq_protocol != "open" or mq_old_value):
-            raise ValueError(
-                "mq_framing='sized' requires mq_protocol='open' without "
-                "old value (the v1 batch frame carries only key/value)"
-            )
-        self.mq_framing = mq_framing
-        self.mq_max_batch_size = mq_max_batch_size
-        self.mq_max_message_bytes = mq_max_message_bytes
-        self._avro_registry = None
-        # admin lifecycle gate — same contract as ChangeFeed (one feed id
-        # covers the whole multi-table feed, like a single changefeed
-        # replicating many tables in the reference)
-        self.admin = admin
-        self.admin_feed = feed_name
-        self._stop_reason: str | None = None
-        self.batch_summaries: list[dict] = []
         # per-table schema registries built from the routed DDL stream;
         # lifecycle DDLs are split out first (they change the TABLE SET)
         import json as _json
@@ -328,21 +285,18 @@ class MultiTableChangeFeed:
         # resolve left to right
         for new, (_ts, old) in self.rename_links.items():
             self.registries[new] = self.registries[old]
-        if self.mq_old_value and any(
-            k in r.ddl_kinds
-            for r in self.registries.values()
-            for k in ("truncate_table", "drop_partition", "truncate_partition")
-        ):
-            # see ChangeFeed: reconstructed pre-images cannot span a wipe
-            raise ValueError(
-                "mq_old_value cannot be combined with a truncate_table DDL"
-            )
-        # feed-scoped epoch ids — see ChangeFeed.feed_id for why
-        import hashlib
-
-        self.feed_id = hashlib.md5(
-            os.path.abspath(checkpoint_dir).encode()
-        ).hexdigest()[:8]
+        super().__init__(
+            spark if spark is not None else next(iter(tables.values())).spark,
+            binlog_dir, checkpoint_dir, mode=mode,
+            max_files_per_trigger=max_files_per_trigger, pending_dir=None,
+            n_parts=n_parts, dynamic_spans=dynamic_spans,
+            collapse_overrides=collapse_overrides or {}, mq_dir=mq_dir,
+            mq_partitions=mq_partitions, mq_protocol=mq_protocol,
+            mq_old_value=mq_old_value, mq_framing=mq_framing,
+            mq_max_batch_size=mq_max_batch_size,
+            mq_max_message_bytes=mq_max_message_bytes, admin=admin,
+            feed_name=feed_name, post_batch=post_batch, stop_ts=stop_ts,
+        )
 
     # -- table operations between batches (handleTableOperation analog) --
     def add_table(self, name: str, table: LakeTable, boundary_ts: int) -> None:
@@ -421,35 +375,16 @@ class MultiTableChangeFeed:
                     # releasing) pre-rename events
                     self.tables[new] = self.tables[name]
 
-    # ---------------- micro-batch ----------------
-    def _read_pending(self, batch_id: int) -> DataFrame | None:
-        # latest pending dir BELOW this batch id — keeps crash-replays
-        # reading the same tail the original run consumed (see
-        # ChangeFeed._read_pending; empty marker dirs mean "no tail")
-        if not os.path.isdir(self.pending_dir):
-            return None
-        below = []
-        for d in sorted(os.listdir(self.pending_dir)):
-            if d.startswith("batch-") and int(d.split("-")[1]) < batch_id:
-                below.append((int(d.split("-")[1]), os.path.join(self.pending_dir, d)))
-        if not below:
-            return None
-        _, path = max(below)
-        if not any(f.endswith(".parquet") for f in os.listdir(path)):
-            return None
-        return self.spark.read.schema(self._stream_schema()).parquet(path)
-
+    # ---------------- feed hooks ----------------
     def _stream_schema(self):
         """Raw mode: the fixed raw envelope. Typed mode: meta columns + the
         UNION of every table's payload fields across all schema versions:
         files written before an add_column read the new column as NULL (same
-        rule as ChangeFeed._typed_stream_schema, but across tables — a name
+        rule as ChangeFeed._stream_schema, but across tables — a name
         used by two tables must have one type)."""
         from pyspark.sql import types as T
 
         if self.mode == "raw":
-            from .changefeed import RAW_BINLOG_SCHEMA
-
             return RAW_BINLOG_SCHEMA
 
         meta = [
@@ -485,81 +420,27 @@ class MultiTableChangeFeed:
         ]
         return T.StructType(pf + meta)
 
-    def _load_or_save_batch_meta(
-        self, batch_id: int, prev_resolved: int, prev_spans: dict, pre_versions: dict
-    ) -> tuple[int, dict, dict]:
-        """Multi-table twin of ChangeFeed._load_or_save_batch_meta: records
-        the pre-batch frontier (global + the per-table per-part span maps
-        the late check compares against) and every table's pre-batch
-        version, write-once per batch id, so a crash-replay recomputes the
-        identical batch."""
-        import json as _json
-
-        mdir = os.path.join(self.checkpoint_dir, "batchmeta")
-        path = os.path.join(mdir, f"{batch_id:010d}.json")
-        if os.path.exists(path):
-            with open(path) as f:
-                rec = _json.load(f)
-            return (
-                int(rec["prev_resolved"]),
-                {
-                    name: {int(p): int(v) for p, v in m.items()}
-                    for name, m in rec.get("prev_spans", {}).items()
-                },
-                {k: int(v) for k, v in rec["pre_versions"].items()},
+    def _meta(self, batch_id, prev_resolved, spans):
+        # the pre-batch frontier, every table's span map (the late check
+        # compares against it) and pre-batch version (the old-value
+        # pre-image snapshot)
+        rec = batch_meta(self.checkpoint_dir, batch_id, {
+            "prev_resolved": prev_resolved,
+            "prev_spans": {name: s.pos for name, s in spans.items()},
+            "pre_versions": {name: t.version for name, t in self.tables.items()},
+        })
+        spans = {
+            name: SpanMap(
+                m, self.tables[name].retired_positions if name in self.tables else {},
+                cap=self.stop_ts.get(name), table=name,
             )
-        os.makedirs(mdir, exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(
-                {
-                    "prev_resolved": prev_resolved,
-                    "prev_spans": {
-                        name: {str(p): v for p, v in m.items()}
-                        for name, m in prev_spans.items()
-                    },
-                    "pre_versions": pre_versions,
-                },
-                f,
-            )
-        os.replace(tmp, path)
-        for d in os.listdir(mdir):
-            if d.endswith(".json") and d != f"{batch_id:010d}.json":
-                os.remove(os.path.join(mdir, d))
-        return prev_resolved, prev_spans, pre_versions
+            for name, m in rec["prev_spans"].items()
+        }
+        pre = {k: int(v) for k, v in rec["pre_versions"].items()}
+        return int(rec["prev_resolved"]), spans, pre
 
-    def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        # lifecycle gate before any work (see ChangeFeed._process_batch):
-        # raising here stops the stream without committing this batch
-        if self.admin is not None and self.admin_feed:
-            from .admin import STATE_NORMAL
-
-            st = self.admin.state(self.admin_feed)
-            if st != STATE_NORMAL:
-                self._stop_reason = st
-                raise RuntimeError(
-                    f"changefeed {self.admin_feed} is {st}; processing "
-                    "halted (owner.go:995-1027)"
-                )
-        try:
-            self._process_batch_inner(batch_df, batch_id)
-            if self.admin is not None and self.admin_feed and self.batch_summaries:
-                self.admin.update_checkpoint(
-                    self.admin_feed, int(self.batch_summaries[-1]["resolved_ts"])
-                )
-        except Exception as e:
-            if self.admin is not None and self.admin_feed:
-                self.admin.set_failed(self.admin_feed, f"{type(e).__name__}: {e}")
-            raise
-
-    def _process_batch_inner(self, batch_df: DataFrame, batch_id: int) -> None:
-        pending = self._read_pending(batch_id)
-        events = batch_df.unionByName(pending) if pending is not None else batch_df
-
-        # schema_version contract guard (see changefeed.schema_version_violation):
-        # per-table expected version, rows routed by the `table` column
-        from .changefeed import schema_version_violation
-
+    def _part_stats(self, events, prev_resolved, spans):
+        # schema_version contract guard, per table (rows routed by `table`)
         sv_viol = F.lit(0)
         for name, reg in self.registries.items():
             if reg.ddl_ts:
@@ -567,131 +448,31 @@ class MultiTableChangeFeed:
                     F.col("table") == F.lit(name),
                     schema_version_violation(reg.ddl_ts),
                 ).otherwise(0)
-        # per-table span maps: each table's puller owns its own spans — the
-        # reference folds resolved per TABLE and the owner min-folds across
-        # tables (cdc/owner.go); merging parts across tables would credit a
-        # lagging table with another table's progress, falsely flagging its
-        # (perfectly ordered) events as late — fatal under old-value mode or
-        # a barrier-ordered data DDL
-        stored: dict[str, dict[int, int]] = {}
-        # per-table retirement checkpoints (span split/merge): a retired
-        # (table, part) span left its table's universe; in-flight data at
-        # or below its final position stays legal, data above it is fatal
-        retired_pos: dict[str, dict[int, int]] = {}
-        for name, t in self.tables.items():
-            retired_pos[name] = {
-                int(k): v for k, v in t.retired_positions.items()
-            }
-            m = {int(k): int(v) for k, v in t.part_watermarks.items()}
-            if name in self.stop_ts:
-                # maps persisted before the stop may carry above-stop
-                # positions — clamp on load so every view agrees (see the
-                # fold-time cap below)
-                cap_ = int(self.stop_ts[name])
-                m = {k: min(v, cap_) for k, v in m.items()}
-            # the declared span universe is PER TABLE: a table's unseen
-            # parts pin ITS OWN resolved at -1 until they report (frontier-
-            # initialized-with-all-spans, cdc/puller/frontier) — gating its
-            # barrier-ordered data DDLs, not the feed's release frontier.
-            # Retired spans never re-seed.
-            for p_ in range(self.n_parts or 0):
-                if p_ not in retired_pos[name]:
-                    m.setdefault(p_, -1)
-            stored[name] = m
-
-        def _union_fold(maps: dict[str, dict[int, int]]) -> dict[int, int]:
-            # the feed's RELEASE frontier stays the union across tables (max
-            # per part) so it is monotone and live even while tables' files
-            # interleave unevenly; per-table lag is handled by the per-table
-            # late check + data-DDL gating below, not by regressing the
-            # global frontier (which would un-release released prefixes).
-            # A universe part retired by EVERY table has left the stream —
-            # it must not re-pin the union at -1. A STOPPED (moved-away)
-            # table contributes nothing: its slice is already bounded by
-            # stop_ts, and its post-stop spans (e.g. split children the
-            # TARGET owns) would otherwise enter the universe at the stop
-            # cap and wedge this capture's frontier there forever.
-            u: dict[int, int] = {}
-            live_tables = [n for n in maps if n not in self.stop_ts]
-            for name in live_tables:
-                for p, v in maps[name].items():
-                    u[p] = max(u.get(p, -1), v)
-            # the static-universe backstop must also ignore stopped tables:
-            # a live table that retired part p (split/merge) must not have
-            # p re-pinned at -1 just because a STOPPED sibling never
-            # retired it — the sibling contributes nothing to the fold, so
-            # it cannot be the reason a part stays demanded (seed-5 soak:
-            # tb's post-split frontier wedged at -1 the first tick after
-            # ta moved away)
-            for p_ in range(self.n_parts or 0):
-                if live_tables and all(
-                    p_ in retired_pos.get(n, {}) for n in live_tables
-                ):
-                    continue
-                u.setdefault(p_, -1)
-            return u
-
-        union = _union_fold(stored)
-        prev_resolved = min(union.values()) if union else -1
-        # persist (frontier, per-table span maps, per-table pre-versions)
-        # before any merge: a crash-replay of this batch sees the tables
-        # already advanced, and the live state would false-panic the late
-        # check and corrupt old-value pre-images (see
-        # ChangeFeed._load_or_save_batch_meta)
-        prev_resolved, stored, pre_versions = self._load_or_save_batch_meta(
-            batch_id,
-            prev_resolved,
-            stored,
-            {name: t.version for name, t in self.tables.items()},
-        )
         # late threshold per (table, part): an event is late only against
         # its OWN span's RELEASED watermark (puller.go:163-168 is per
         # puller) = min(span's seen max, the released union frontier) —
         # the min clamp excludes the carried pending tail (above the
         # frontier, never released) and spans that never reported (-1,
         # promised nothing). The single-table feed's global-min check is
-        # the one-table special case of exactly this rule.
-        # thresholds ship as a BROADCAST side table, not literals baked into
-        # the plan: O(tables × parts) rows is tiny to broadcast but would be
-        # a plan-size explosion as an expression at thousands of tables
+        # the one-table special case of exactly this rule. Thresholds ship
+        # as a BROADCAST side table, not literals baked into the plan:
+        # O(tables × parts) rows is tiny to broadcast but would be a
+        # plan-size explosion as an expression at thousands of tables.
         thr_rows = [
-            (name, int(p), min(int(v), prev_resolved))
-            for name, m in stored.items()
-            for p, v in m.items()
+            (name, p, min(v, prev_resolved))
+            for name, s in spans.items()
+            for p, v in s.pos.items()
         ]
-        ev_thr = events
+        thr = F.lit(-1)
         if thr_rows:
             thr_df = self.spark.createDataFrame(
                 thr_rows, "table string, part int, _thr long"
             )
-            ev_thr = events.join(F.broadcast(thr_df), ["table", "part"], "left")
-        thr = F.coalesce(F.col("_thr"), F.lit(-1)) if thr_rows else F.lit(-1)
-        # resolved-ts control events (op='R') advance their (table, part)
-        # span's frontier via max_ts with no data — what keeps an IDLE
-        # table's barriers (data DDLs, target_ts) reachable; excluded from
-        # event/late/violation counts and dropped from the stream below
-        from ..model import OP_SPLIT, TOPOLOGY_OPS
+            events = events.join(F.broadcast(thr_df), ["table", "part"], "left")
+            thr = F.coalesce(F.col("_thr"), F.lit(-1))
+        return part_stats(events, ["table", "part"], F.col("commit_ts") <= thr, sv_viol)
 
-        _is_topo = F.col("op").isin(list(TOPOLOGY_OPS))
-        _is_pos = ~_is_topo  # topology rows carry no stream position
-        _is_data = ~F.col("op").isin(["R", *TOPOLOGY_OPS])
-        part_stats = (
-            ev_thr.groupBy("table", "part")
-            .agg(
-                F.max(F.when(_is_pos, F.col("commit_ts"))).alias("max_ts"),
-                F.min(F.when(_is_pos, F.col("commit_ts"))).alias("min_ts"),
-                F.max(F.when(_is_data, F.col("commit_ts"))).alias("data_max_ts"),
-                F.sum(F.when(_is_topo, 1).otherwise(0)).alias("topo"),
-                F.sum(F.when(_is_data, 1).otherwise(0)).alias("cnt"),
-                F.sum(F.when(_is_data, sv_viol).otherwise(0)).alias("sv_viol"),
-                F.sum(
-                    F.when(
-                        _is_data & (F.col("commit_ts") <= thr), 1
-                    ).otherwise(0)
-                ).alias("late"),
-            )
-            .collect()
-        )
+    def _known(self) -> set:
         # a multi-capture deployment (TableScheduler) streams EVERY table's
         # events through every capture; only tables this feed knows — its
         # own, plus lifecycle/rename handles — may influence its span maps
@@ -699,654 +480,71 @@ class MultiTableChangeFeed:
         # would advance the frontier past what this capture replicates —
         # and regress it when the maps re-seed from the lake). Unassigned
         # rows still ride the pending tail (written from the UNFILTERED
-        # stream below), which is exactly what makes a later move-table
-        # handoff exact.
-        part_stats_all = part_stats
-        _known = (
-            set(self.tables)
-            | set(self.registries)
-            | set(self.create_specs)
-            | set(self.rename_links)
-        )
-        part_stats = [r for r in part_stats_all if r["table"] in _known]
-        n_sv = sum(int(r["sv_viol"]) for r in part_stats)
-        if n_sv:
-            raise RuntimeError(
-                f"schema_version contract violated: {n_sv} events stamped above "
-                "version_at(commit_ts) — the mounter hint would drop them"
-            )
-        n_topo = sum(int(r["topo"]) for r in part_stats)
-        topo_rows: list = []
-        if n_topo:
-            if not self.dynamic_spans:
-                # fail loudly rather than misfold a control row as data
-                raise RuntimeError(
-                    f"{n_topo} span-topology events (op S/M) in a feed "
-                    "created without dynamic_spans=True — a static span "
-                    "universe cannot split/merge"
-                )
-            topo_rows = sorted(
-                (
-                    r
-                    for r in events.filter(_is_topo)
-                    .select("table", "commit_ts", "seq", "op", "part", "doc_id")
-                    .collect()
-                    if r["table"] in _known  # another capture's tables'
-                    # topology is not this feed's business
-                    # a stopped (moved-away) table's post-stop topology
-                    # belongs to the TARGET capture's pipeline — applying
-                    # it here would commit to a manifest the target now
-                    # owns (the handoff race move_table used to forbid)
-                    and not (
-                        r["table"] in self.stop_ts
-                        and int(r["commit_ts"]) > int(self.stop_ts[r["table"]])
-                    )
-                ),
-                key=lambda r: (int(r["commit_ts"]), int(r["seq"])),
-            )
-        # spans retiring in THIS batch (legal same-batch data + the crash-
-        # replay of a topology batch)
-        batch_retiring: dict[str, set[int]] = {}
-        for r in topo_rows:
-            s = batch_retiring.setdefault(r["table"], set())
-            if r["op"] == OP_SPLIT:
-                s.add(int(r["part"]))
-            else:
-                s.update(int(x) for x in str(r["doc_id"]).split(","))
-        bad = sorted(
-            (r["table"], int(r["part"]))
-            for r in part_stats
-            if int(r["part"]) in retired_pos.get(r["table"], {})
-            and int(r["part"]) not in batch_retiring.get(r["table"], set())
-            and r["data_max_ts"] is not None
-            and int(r["data_max_ts"]) > retired_pos[r["table"]][int(r["part"])]
-        )
-        if bad:
-            raise RuntimeError(
-                f"data events above the retirement checkpoint on retired "
-                f"span(s) {bad}: the old region's stream ended at its "
-                "split/merge (kv/client.go region-change contract)"
-            )
-        n_late = sum(int(r["late"]) for r in part_stats)
-        _data_op_ddl = any(
-            k in ("truncate_table", "drop_partition", "truncate_partition")
-            for r in self.registries.values()
-            for k in r.ddl_kinds
-        )
-        if n_late and (self.mq_old_value or _data_op_ddl):
-            # same rule as ChangeFeed: pre-image reconstruction is sequence-
-            # sensitive, so old-value mode cannot tolerate late events
-            raise RuntimeError(
-                f"late-event contract violated: {n_late} events at or below "
-                f"their own table's span frontier (puller.go:163-168, "
-                "required by enable-old-value)"
-            )
-        for r in part_stats:
-            p = int(r["part"])
-            name = r["table"]
-            if r["max_ts"] is None:
-                continue  # topology-only (table, part): no position to fold
-            if p in retired_pos.get(name, {}) and p not in batch_retiring.get(
-                name, set()
-            ):
-                continue  # stale heartbeat racing a committed retirement
-            m = stored.setdefault(name, {})
-            v = int(r["max_ts"])
-            if name in self.stop_ts:
-                # a stopped (moved-away) table's span map must never carry
-                # post-stop positions (they belong to the target capture's
-                # pipeline, changefeed.go:546-552). Capping at FOLD time —
-                # not just at persist — keeps the in-memory union frontier
-                # identical to what a restart reloads, so the reported
-                # resolved can never regress across batches
-                v = min(v, int(self.stop_ts[name]))
-            m[p] = max(m.get(p, -1), v)
-        # apply span topology per table (ordered; end-of-batch effect) —
-        # same rules as the single-table feed: split children resubscribe
-        # at the parent's checkpoint, a merge seeds at min(parent positions),
-        # each retiring span records its own final position
-        retired_new: dict[str, dict[int, int]] = {}
-        for r in topo_rows:
-            name = r["table"]
-            m = stored.setdefault(name, {})
-            rp = retired_pos.get(name, {})
-            rn = retired_new.setdefault(name, {})
-            spec = [int(x) for x in str(r["doc_id"]).split(",")]
-            if r["op"] == OP_SPLIT:
-                parent = int(r["part"])
-                pos = m.pop(parent, -1)
-                if parent in rp:
-                    pos = max(pos, rp[parent])
-                rn[parent] = pos
-                for c in spec:
-                    if c in rp or c in rn:
-                        raise RuntimeError(
-                            f"split child span {c} of table {name!r} is "
-                            "retired — span ids are never reused"
-                        )
-                    m[c] = max(m.get(c, -1), pos)
-            else:
-                child = int(r["part"])
-                if child in rp or child in rn:
-                    raise RuntimeError(
-                        f"merge target span {child} of table {name!r} is "
-                        "retired — span ids are never reused"
-                    )
-                seed = None
-                for p in spec:
-                    pos = m.pop(p, -1)
-                    if p in rp:
-                        pos = max(pos, rp[p])
-                    rn[p] = pos
-                    seed = pos if seed is None else min(seed, pos)
-                m[child] = max(m.get(child, -1), seed if seed is not None else -1)
-        if topo_rows:
-            # retirements change per-table universes: fold the union fresh
-            # (monotone — children floors equal their parents' positions)
-            for name, rn in retired_new.items():
-                retired_pos.setdefault(name, {}).update(rn)
-        union = _union_fold(stored)
-        resolved = min(union.values()) if union else -1
-
-        data = events.filter(_is_data)
-        ready = data.filter(F.col("commit_ts") <= F.lit(resolved))
-        tail = data.filter(F.col("commit_ts") > F.lit(resolved))
-
-        # grow/shrink the table set from in-stream lifecycle DDLs before
-        # routing (handleTableOperation analog, driven by the DDL stream)
-        self._apply_lifecycle(resolved)
-
-        per_table = {}
-        mq_tables: dict[str, tuple] = {}
-        for name, table in self.tables.items():
-            # each table persists ITS OWN span map (a lifecycle table
-            # created this batch takes whatever its first slice reported)
-            watermarks = {
-                str(k): v for k, v in stored.get(name, {}).items()
-            }
-            if name in self.stop_ts:
-                # stopped (moved-away) table: this capture's pipeline ended
-                # at stop_ts — positions above it belong to the TARGET
-                # capture (changefeed.go:546-552). The heartbeat branch
-                # already clamps; the merge path must too, or an empty
-                # merge persists post-move observations into the shared
-                # span map and drags the target's frontier ahead of what
-                # it actually streamed
-                cap = int(self.stop_ts[name])
-                watermarks = {
-                    p: (v if isinstance(v, dict) else min(int(v), cap))
-                    for p, v in watermarks.items()
-                }
-            for p, pos in retired_new.get(name, {}).items():
-                # sentinel: _finalize_commit drops the span from this
-                # table's persisted universe, recording its final checkpoint
-                watermarks[str(p)] = {"retired_at": int(pos)}
-            sl = ready.filter(F.col("table") == F.lit(name))
-            if name in self.boundaries:
-                sl = sl.filter(F.col("commit_ts") > F.lit(self.boundaries[name]))
-            if name in self.stop_ts:
-                sl = sl.filter(F.col("commit_ts") <= F.lit(self.stop_ts[name]))
-            wins = self.lifecycle_windows.get(name)
-            if wins:
-                cond = F.lit(False)
-                for wlo, whi in wins:
-                    c = F.lit(True)
-                    if wlo is not None:
-                        c = F.col("commit_ts") > F.lit(wlo)
-                    if whi is not None:
-                        c = c & (F.col("commit_ts") <= F.lit(whi))
-                    cond = cond | c
-                sl = sl.filter(cond)
-
-            # per-table DDL barriers within the releasable range (same split
-            # rule as the single-table feed: DML at commit_ts <= ddl_ts uses
-            # the pre-DDL schema, then the lake schema advances)
-            # barriers = ALL configured DDL ts ≤ resolved, independent of
-            # execution state: slice indexing (hence epoch ids) must be
-            # stable across mid-batch crash replays (a replay after a DDL
-            # schema commit must not re-slice differently, or post-DDL
-            # events land in an already-committed epoch id and are lost).
-            reg = self.registries.get(name)
-            # barrier-ordered DATA ops additionally wait for the TABLE's
-            # own span frontier to drain past them (the reference's DDL
-            # barrier waits for the table sorter): the feed-level union
-            # frontier may run ahead on another table's progress, and a
-            # wipe applied before this table's pre-barrier events arrived
-            # would be mis-ordered — once applied, anything at or below
-            # t_res is late-FATAL above, closing the window. Every barrier
-            # AFTER a deferred one defers too (version indices are ordered).
-            t_res = min(stored[name].values()) if stored.get(name) else -1
-            barriers = []
-            if reg is not None:
-                for i, ts in enumerate(reg.ddl_ts):
-                    if ts > resolved:
-                        break
-                    if (
-                        reg.ddl_kinds[i]
-                        in ("truncate_table", "drop_partition", "truncate_partition")
-                        and ts > t_res
-                    ):
-                        break
-                    barriers.append((i + 1, ts))
-            slices: list[tuple[int | None, int | None]] = []
-            lo = None
-            for _ver, ts in barriers:
-                slices.append((lo, ts))
-                lo = ts
-            slices.append((lo, None))
-
-            if self.mq_dir is not None:
-                mq_tables[name] = (sl, barriers, reg)
-
-            # skip provably-empty leading slices (barriers from prior
-            # batches) — data-derived, so identical on replay. THIS table's
-            # min only: the global fold would defeat the skip for every
-            # idle table whenever any one table has releasable events (N
-            # empty merge jobs + N manifest versions per batch)
-            lo_evt = min(
-                (
-                    int(r["min_ts"])
-                    for r in part_stats
-                    if r["min_ts"] is not None and r["table"] == name
-                ),
-                default=None,
-            )
-            if name in self.stop_ts:
-                # a stopped (moved-away) table whose batch rows all sit
-                # ABOVE stop_ts has a provably-empty slice set — and an
-                # "empty" merge would still bump the manifest version FROM
-                # THIS CAPTURE'S STALE COPY, clobbering the target
-                # capture's commits (both captures hold LakeTable objects
-                # on one root after a move; the last committer in a tick
-                # wins the CURRENT swap). Skip outright when empty…
-                if lo_evt is not None and lo_evt > int(self.stop_ts[name]):
-                    lo_evt = None
-                # …and for a legitimate ≤stop commit (crash-replayed
-                # redelivery), rebase on the CURRENT manifest first: the
-                # target may have committed since this capture's copy
-                # loaded, and epoch idempotence survives a refresh (the
-                # fresh manifest's committed_epochs is a superset)
-                table.refresh()
-            committed_any = False
-            for k, (slo, shi) in enumerate(slices):
-                provably_empty = (
-                    lo_evt is None
-                    or lo_evt > resolved
-                    or (shi is not None and shi < lo_evt)
-                )
-                if not provably_empty:
-                    ssl = sl
-                    if slo is not None:
-                        ssl = ssl.filter(F.col("commit_ts") > F.lit(slo))
-                    if shi is not None:
-                        ssl = ssl.filter(F.col("commit_ts") <= F.lit(shi))
-                    key = table.key_col
-                    payload = [f["name"] for f in table.current_fields if f["name"] != key]
-                    if self.mode == "raw":
-                        from ..operators.mounter import mount_raw
-
-                        hi_ts = shi if shi is not None else resolved
-                        hint = None
-                        if reg is not None and len(reg.versions) > 1:
-                            hint = list(range(0, reg.version_at(hi_ts) + 1))
-                        ssl = mount_raw(
-                            ssl, reg, table.schema_version, versions_present=hint
-                        )
-                    # single-shuffle collapse fused with the bucketed write
-                    # (operators/lww.py lww_collapse_prearranged; per-table
-                    # skew overrides via collapse_overrides)
-                    ev = ssl.select(key, "op", "commit_ts", "seq", *payload)
-                    strat = self.collapse_overrides.get(name, "bucket_window")
-                    if strat == "bucket_window":
-                        from ..operators.lww import lww_collapse_prearranged
-
-                        winners = lww_collapse_prearranged(
-                            ev, table._bucket_expr(table.bucket_col), table.n_buckets, [key]
-                        )
-                        st = table.merge_epoch(
-                            winners,
-                            f"cfm-{self.feed_id}-{batch_id:010d}-{name}-s{k}",
-                            watermarks=watermarks,
-                            assume_deduped=True,
-                            prearranged=True,
-                        )
-                    else:
-                        from ..operators.lww import lww_latest_agg
-
-                        fn = lww_latest_agg if strat == "agg" else lww_latest_semijoin
-                        winners = fn(ev, [key])
-                        st = table.merge_epoch(
-                            winners,
-                            f"cfm-{self.feed_id}-{batch_id:010d}-{name}-s{k}",
-                            watermarks=watermarks,
-                            assume_deduped=True,
-                        )
-                    committed_any = committed_any or st.get("committed", False)
-                if shi is not None:
-                    ver = reg.ddl_ts.index(shi) + 1
-                    if table.schema_version < ver:
-                        kind = reg.ddl_kinds[ver - 1]
-                        dspec = reg.ddl_specs[ver - 1]
-                        if kind == "truncate_table":
-                            table.update_schema(
-                                "truncate_table", {}, f"ddl-{name}-{shi}"
-                            )
-                        elif kind in (
-                            "add_partition", "drop_partition",
-                            "truncate_partition",
-                        ):
-                            # partition ops (schema_storage.go:586-624):
-                            # tombstone the partition's rows at the barrier,
-                            # then bump the version (registry/lake lockstep)
-                            if kind != "add_partition":
-                                table.delete_where(
-                                    dspec["where"], shi,
-                                    f"ddl-{name}-{shi}#del",
-                                )
-                            table.update_schema(
-                                kind, dspec, f"ddl-{name}-{shi}"
-                            )
-                        else:
-                            from .changefeed import advance_lake_schema
-
-                            advance_lake_schema(
-                                table, reg.fields(ver), f"ddl-{name}-{shi}"
-                            )
-            per_table[name] = committed_any
-
-        # topology batches force a per-table watermark commit even when the
-        # table had no merge this batch: the retirement must outlive the
-        # consumed source file (idempotent by epoch id)
-        for name, rn in retired_new.items():
-            t = self.tables.get(name)
-            if t is None or not rn:
-                continue
-            wm = {str(k): v for k, v in stored.get(name, {}).items()}
-            for p, pos in rn.items():
-                wm[str(p)] = {"retired_at": int(pos)}
-            t.advance_watermarks(
-                wm, f"cfm-{self.feed_id}-{batch_id:010d}-{name}-topo"
-            )
-
-        # heartbeat-persisted frontier (same rule as the single-table
-        # feed): a table whose span map advanced via resolved-ts control
-        # rows in a batch that merged nothing for it must persist the
-        # advance — control rows are consumed by the source and never
-        # re-read (unlike the data tail, which persists in pending/), so an
-        # in-memory-only advance rolls that table's frontier back on the
-        # next batch's reload and loses delivered heartbeats forever.
-        # Metadata-only commit, idempotent by epoch id.
-        for name, t in self.tables.items():
-            if per_table.get(name) or retired_new.get(name):
-                continue
-            m = stored.get(name) or {}
-            if name in self.stop_ts:
-                # a stopped (removed / moved-away) table's pipeline ended at
-                # stop_ts: this capture must not persist observations above
-                # it — after a move, positions above the boundary belong to
-                # the TARGET capture's pipeline (changefeed.go:546-552), and
-                # polluting the shared map would drag the target's frontier
-                # ahead of what it actually streamed
-                cap = int(self.stop_ts[name])
-                m = {p: min(int(v), cap) for p, v in m.items()}
-                # rebase on the CURRENT manifest: the target capture owns
-                # this table now — advancing from this capture's stale copy
-                # would clobber the target's commits at the CURRENT swap
-                t.refresh()
-            cur = t.part_watermarks
-            if any(int(v) > int(cur.get(str(p), -1)) for p, v in m.items()):
-                t.advance_watermarks(
-                    {str(k): int(v) for k, v in m.items()},
-                    f"cfm-{self.feed_id}-{batch_id:010d}-{name}-wm",
-                )
-
-        if self.mq_dir is not None:
-            mq_counts = {}
-            for r in part_stats:
-                if r["cnt"] is not None:
-                    mq_counts[r["table"]] = mq_counts.get(r["table"], 0) + int(r["cnt"])
-            self._emit_mq(mq_tables, batch_id, resolved, pre_versions, mq_counts)
-
-        # tail presence over the UNFILTERED stats: an unassigned table's
-        # above-frontier rows must keep riding pending/ (move-table handoff)
-        had_tail = any(
-            r["max_ts"] is not None and int(r["max_ts"]) > resolved
-            for r in part_stats_all
-        )
-        out = os.path.join(self.pending_dir, f"batch-{batch_id:010d}")
-        if had_tail:
-            # dropDuplicates: see ChangeFeed._write_tail — a crash-replayed
-            # batch would otherwise double its tail rows (pending ∪ input).
-            # The key includes `table`: two tables' per-source (ts, seq)
-            # counters overlap, so the single-table key would collapse
-            # distinct events that collide across tables
-            tail.dropDuplicates(["table", "commit_ts", "seq", "op", "doc_id"]).repartition(
-                4
-            ).write.mode("overwrite").parquet(out)
-        else:
-            os.makedirs(out, exist_ok=True)  # empty marker (no tail)
-        keep = {f"batch-{batch_id:010d}", f"batch-{batch_id - 1:010d}"}
-        for d in (
-            os.listdir(self.pending_dir) if os.path.isdir(self.pending_dir) else []
-        ):
-            if d.startswith("batch-") and d not in keep:
-                shutil.rmtree(os.path.join(self.pending_dir, d), ignore_errors=True)
-
-        self.batch_summaries.append(
-            {
-                "batch_id": batch_id,
-                "resolved_ts": resolved,
-                "tables": per_table,
-                # per-table span positions (`cdc cli processor query`
-                # analog, cmd/client_processor.go: each table's resolved =
-                # min over ITS OWN spans; None = no span info yet)
-                "tables_resolved": {
-                    name: (min(m.values()) if m else None)
-                    for name, m in stored.items()
-                    if name in self.tables
-                },
-                "events": sum(int(r["cnt"]) for r in part_stats),
-                **(
-                    {
-                        "span_changes": n_topo,
-                        "spans_retired": {
-                            n: sorted(rn) for n, rn in retired_new.items()
-                        },
-                    }
-                    if n_topo
-                    else {}
-                ),
-            }
-        )
-        if self.post_batch is not None:
-            self.post_batch(self.batch_summaries[-1])
-
-    def _emit_mq(
-        self,
-        mq_tables: dict,
-        batch_id: int,
-        resolved: int,
-        pre_versions: dict | None = None,
-        mq_counts: dict | None = None,
-    ) -> None:
-        """Multi-table MQ emission: every table's released prefix encoded as
-        Open-Protocol messages into ONE batch dir, rows routed by the
-        dispatcher rule set (first-match-wins glob switcher, §2.10), then
-        the resolved broadcast and per-table DDL messages (every barrier ≤
-        resolved — consumer diffs are idempotent, see ChangeFeed._emit_mq)."""
-        import json
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from ..functions.codec import KEY_FIELDS
-        from ..operators.mounter import mount_raw
-        from .dispatch import compile_dispatch_rules, index_value_partition
-        from .protocols import encode_mq
-
-        if self.mq_protocol == "avro" and self._avro_registry is None:
-            from ..functions.avro_schema import AvroSchemaRegistry
-
-            self._avro_registry = AvroSchemaRegistry()
-        outs = []
-        ddl_msgs: list[tuple[str, int, list]] = []
-        for name, (sl, barriers, reg) in mq_tables.items():
-            table = self.tables[name]
-            if self.mode == "raw":
-                hint = None
-                if reg is not None and len(reg.versions) > 1:
-                    hint = list(range(0, reg.version_at(resolved) + 1))
-                sl = mount_raw(sl, reg, table.schema_version, versions_present=hint)
-            key = table.key_col
-            part_col = (
-                compile_dispatch_rules(
-                    self.mq_dispatch_rules, self.mq_partitions, key_col=key
-                )
-                if self.mq_dispatch_rules
-                else index_value_partition(self.mq_partitions, key_col=key)
-            )
-            key_json = F.to_json(
-                F.struct(*[F.col(c) for c in KEY_FIELDS])
-            ).alias("key_json")
-            if self.mq_old_value and self.mq_protocol == "open":
-                from .changefeed import attach_old_value_json
-
-                # serialize-once path (see attach_old_value_json); a table
-                # created THIS batch has no pre-batch version — every key
-                # is a true insert against version 0
-                outs.append(
-                    attach_old_value_json(
-                        table, sl, pre_versions.get(name, 0), key_json,
-                        part_col, n_events=(mq_counts or {}).get(name),
-                    )
-                )
-            else:
-                if self.mq_old_value:
-                    from .changefeed import attach_old_images
-
-                    # a table created THIS batch has no pre-batch version —
-                    # every key is a true insert against version 0
-                    sl = attach_old_images(
-                        table, sl, pre_versions.get(name, 0),
-                        n_events=(mq_counts or {}).get(name),
-                    )
-                outs.append(
-                    encode_mq(
-                        sl, table, self.mq_protocol, key_json, part_col,
-                        avro_registry=self._avro_registry,
-                        old_value=self.mq_old_value,
-                    )
-                )
-            for ver, ts in barriers:
-                ddl_msgs.append(
-                    (name, ts, reg.fields(ver), reg.ddl_kinds[ver - 1],
-                     reg.ddl_specs[ver - 1])
-                )
-        out = outs[0]
-        for o in outs[1:]:
-            out = out.unionByName(o)
-        batch_dir = os.path.join(self.mq_dir, f"batch-{batch_id:010d}")
-        from .dispatch import identity_repartition
-
-        if self.mq_framing == "sized":
-            # batch-framed wire form — see ChangeFeed._emit_mq; tables
-            # interleave within a partition's frames in (commit_ts, seq)
-            # order, exactly the shared-topic layout
-            from ..functions.codec import frame_sized_messages
-
-            framed = frame_sized_messages(
-                out, "partition", order_cols=("_ots", "_oseq"),
-                max_batch_size=self.mq_max_batch_size,
-                max_message_bytes=self.mq_max_message_bytes,
-            )
-            framed.sortWithinPartitions("partition", "msg_idx").write.mode(
-                "overwrite"
-            ).partitionBy("partition").parquet(batch_dir)
-        else:
-            # per-partition commit order — see ChangeFeed._emit_mq
-            out = identity_repartition(out, self.mq_partitions)
-            out.sortWithinPartitions(
-                "partition", "_ots", "_oseq"
-            ).drop("_ots", "_oseq").write.mode(
-                "overwrite"
-            ).partitionBy("partition").parquet(batch_dir)
-        res = pa.table(
-            {
-                "partition": pa.array(list(range(self.mq_partitions)), pa.int32()),
-                "key_json": pa.array(
-                    [
-                        json.dumps({"ts": resolved, "type": "resolved"})
-                        for _ in range(self.mq_partitions)
-                    ]
-                ),
-            }
-        )
-        tmp = os.path.join(batch_dir, ".resolved.parquet.tmp")
-        pq.write_table(res, tmp)
-        os.replace(tmp, os.path.join(batch_dir, "resolved.parquet"))
-        for name, ts, fields_next, kind, dspec in ddl_msgs:
-            ddl = pa.table(
-                {
-                    "key_json": pa.array(
-                        [json.dumps({"ts": ts, "type": "ddl", "table": name})]
-                    ),
-                    "value_json": pa.array(
-                        [json.dumps(
-                            {"fields": fields_next, "ddl_type": kind,
-                             "spec": dspec}
-                        )]
-                    ),
-                }
-            )
-            fname = f"ddl-{name}-{ts:020d}.parquet"
-            tmp = os.path.join(batch_dir, "." + fname + ".tmp")
-            pq.write_table(ddl, tmp)
-            os.replace(tmp, os.path.join(batch_dir, fname))
-
-    # ---------------- run ----------------
-    def _stream(self) -> DataFrame:
-        r = self.spark.readStream.schema(self._stream_schema())
-        if self.max_files_per_trigger:
-            r = r.option("maxFilesPerTrigger", str(self.max_files_per_trigger))
-        return r.parquet(self.binlog_dir)
-
-    def run_available(self) -> list[dict]:
-        """Drain available binlog files. A feed whose admin state is not
-        ``normal`` processes nothing (see ChangeFeed.run_available)."""
-        self._stop_reason = None
-        if not self.tables and not self.create_specs:
-            # idle (empty) capture: consume NOTHING — the checkpoint must
-            # not advance past files a future add_table needs to stream
-            return self.batch_summaries
-        if self.admin is not None and self.admin_feed:
-            from .admin import STATE_NORMAL
-
-            if self.admin.state(self.admin_feed) != STATE_NORMAL:
-                return self.batch_summaries
-        q = (
-            self._stream()
-            .writeStream.foreachBatch(self._process_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        except Exception:
-            if self._stop_reason is None:
-                raise
-        return self.batch_summaries
-
-    def start(self, processing_time: str = "5 seconds"):
-        """Continuous micro-batching (production mode)."""
+        # stream), which is exactly what makes a later move-table handoff
+        # exact.
         return (
-            self._stream()
-            .writeStream.foreachBatch(self._process_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(processingTime=processing_time)
-            .start()
+            set(self.tables) | set(self.registries)
+            | set(self.create_specs) | set(self.rename_links)
         )
 
+    def _late_at(self, prev_resolved: int) -> str:
+        return "their own table's span frontier"
+
+    def _route(self, ready: DataFrame, name: str) -> DataFrame:
+        """The table's rows of the released prefix: its add-boundary,
+        stop-ts and lifecycle windows applied."""
+        sl = ready.filter(F.col("table") == F.lit(name))
+        if name in self.boundaries:
+            sl = sl.filter(F.col("commit_ts") > F.lit(self.boundaries[name]))
+        if name in self.stop_ts:
+            sl = sl.filter(F.col("commit_ts") <= F.lit(self.stop_ts[name]))
+        wins = self.lifecycle_windows.get(name)
+        if wins:
+            cond = F.lit(False)
+            for wlo, whi in wins:
+                c = F.lit(True)
+                if wlo is not None:
+                    c = F.col("commit_ts") > F.lit(wlo)
+                if whi is not None:
+                    c = c & (F.col("commit_ts") <= F.lit(whi))
+                cond = cond | c
+            sl = sl.filter(cond)
+        return sl
+
+    def _mq_partition(self, table: LakeTable):
+        # the dispatcher rule set (§2.10 switcher — per-table glob
+        # matchers, first match wins); default index-value keeps per-key
+        # ordering
+        from .dispatch import compile_dispatch_rules, index_value_partition
+
+        if self.mq_dispatch_rules:
+            return compile_dispatch_rules(
+                self.mq_dispatch_rules, self.mq_partitions, key_col=table.key_col
+            )
+        return index_value_partition(self.mq_partitions, key_col=table.key_col)
+
+    def _summary(self, b: Batch) -> dict:
+        retired = {n: sorted(s.retired_new) for n, s in b.spans.items() if s.retired_new}
+        return {
+            "batch_id": b.id,
+            "resolved_ts": b.resolved,
+            "tables": {
+                name: any(st.get("committed", False) for _, st in b.applied[name])
+                for name in self.tables
+            },
+            # per-table span positions (`cdc cli processor query` analog,
+            # cmd/client_processor.go: each table's resolved = min over ITS
+            # OWN spans; None = no span info yet)
+            "tables_resolved": {
+                name: s.resolved(None) for name, s in b.spans.items() if name in self.tables
+            },
+            "events": sum(int(r["cnt"]) for r in b.stats),
+            **(
+                {"span_changes": b.n_topo, "spans_retired": retired}
+                if b.n_topo
+                else {}
+            ),
+        }
 
 def consistent_read(tables: dict[str, LakeTable], primary_ts: int) -> dict[str, DataFrame]:
     """Cross-table snapshot-isolation read at ONE upstream consistency

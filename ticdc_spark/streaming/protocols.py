@@ -47,7 +47,7 @@ def encode_mq(
     multi-table emissions union per-table encodes directly.
 
     old_value: sl additionally carries old_<col>/had_old (see
-    ChangeFeed._attach_old_images). open emits them as an `old_json` column
+    feed.attach_old_images). open emits them as an `old_json` column
     (the open-protocol "p" pre-image analog); maxwell as its `old` map.
 
     Every branch also passes (_ots, _oseq) = (commit_ts, seq) through: the

@@ -28,7 +28,7 @@ in each capture's pending/ dir). That tail is what makes the handoff exact:
         committed by the source (its released prefix);
       * every event ABOVE the boundary from already-consumed files sits in
         the TARGET's own pending tail (the tail is written unfiltered,
-        multi.py _process_batch_inner), and future files arrive normally;
+        feed.FeedBase._write_tail), and future files arrive normally;
       * the target's add-boundary filter (commit_ts > boundary) excludes
         any overlap, so each event applies exactly once — the lake table's
         epoch commits are feed-scoped, so source and target commits never
