@@ -656,7 +656,7 @@ def bench_stream_old_value_sparse(
     snapshot (256 buckets), then n_batches trickle batches of n_trickle
     updates each ride the key-pruned pre-image read
     (lake.table.read_version_for_keys: per-file [min,max]+bloom probed
-    executor-side, pre-collapse semi-join). Reports wall vs an identically-
+    on the driver, pre-collapse semi-join). Reports wall vs an identically-
     shaped plain-MQ run AND pruned-vs-total pre-image file counts — with 64
     probe keys against 256 base buckets, ≥3/4 of base files must prune, and
     later trickles bloom-prune earlier trickles' delta files too."""

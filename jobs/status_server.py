@@ -357,21 +357,24 @@ def _routes(
         if not table:
             return 400, {"error": f"invalid tableID: {table!r}"}
         # ManualSchedule resolves the source capture internally
-        # (cdc/http_handler.go:210 s.owner.ManualSchedule) — so do we
-        src = next(
-            (
-                cid
-                for cid, cf in scheduler.captures.items()
-                if table in cf.tables and table not in cf.stop_ts
-            ),
-            None,
-        )
-        if src is None:
-            return 400, {"error": f"invalid tableID: {table!r} (not live anywhere)"}
-        try:
-            scheduler.move_table(table, src, to)
-        except (ValueError, KeyError) as e:
-            return 400, {"error": str(e)}
+        # (cdc/http_handler.go:210 s.owner.ManualSchedule) — so do we, under
+        # the owner lock (an RLock; move_table re-takes it), so a tick()
+        # cannot finish a move between the lookup and the call
+        with scheduler.lock:
+            src = next(
+                (
+                    cid
+                    for cid, cf in scheduler.captures.items()
+                    if table in cf.tables and table not in cf.stop_ts
+                ),
+                None,
+            )
+            if src is None:
+                return 400, {"error": f"invalid tableID: {table!r} (not live anywhere)"}
+            try:
+                scheduler.move_table(table, src, to)
+            except (ValueError, KeyError) as e:
+                return 400, {"error": str(e)}
         return 200, {"status": True, "message": ""}
 
     def resign_post(_form):

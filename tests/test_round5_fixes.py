@@ -1,9 +1,5 @@
 """Round-5 ADVICE + verdict fixes, pinned.
 
-- read_version_for_keys on a table with bucket_col != key_col probes EVERY
-  file's sidecars (the per-bucket meta index hashes bucket_col, so probing
-  it by hash(key) silently pruned files that DO hold the key) and collapses
-  clean+dirty files together (a key's versions span buckets there)
 - syncdiff array canonicalization is element-unambiguous: ['a,b'] vs
   ['a','b'] and ['a',NULL] vs ['a'] serialize distinctly
 - MultiTableChangeFeed.add_table turns key blooms on under mq_old_value
@@ -12,7 +8,9 @@
   window (pseudo-events at -2^62): first-in-batch events see the snapshot
   image, true inserts see none, in-batch chains unchanged — including for
   events at commit_ts 0
-- read_version_for_keys records pruning telemetry (preimage_stats)
+
+The read_version_for_keys fixes (non-key bucketing, pruning telemetry) live
+in tests/test_key_blooms.py.
 """
 
 import os
@@ -41,51 +39,6 @@ FIELDS = [
     {"id": 2, "name": "n_tok", "type": "long"},
     {"id": 3, "name": "source", "type": "string"},
 ]
-
-
-def test_read_version_for_keys_nonkey_bucketing(spark, tmp_path):
-    """Probes on a bucket_col != key_col table must not lose pre-images."""
-    root = str(tmp_path / "nb")
-    t = LakeTable.create(
-        spark, root, fields=FIELDS, n_buckets=8, bucket_col="source"
-    )
-    t.set_key_blooms(True)
-    t.merge_epoch(_events(spark, 400), "e1")
-    # updates move some keys to a DIFFERENT bucket (source changes), so
-    # their versions genuinely span buckets
-    upd = _events(spark, 100, ts0=1000, op="U").withColumn(
-        "source", F.lit("moved")
-    )
-    t.merge_epoch(upd, "e2")
-    v = t.version
-    keys = spark.createDataFrame(
-        [(f"k{i}",) for i in range(0, 400, 7)], "doc_id string"
-    )
-    pre = t.read_version_for_keys(v, keys)
-    got = {r["doc_id"]: r for r in pre.collect()}
-    want = {r["doc_id"]: r for r in t.read_version(v).join(keys, "doc_id", "semi").collect()}
-    assert set(got) >= set(want), f"missing pre-images: {sorted(set(want) - set(got))[:5]}"
-    # exactly one collapsed row per key, values matching the version read
-    dups = pre.groupBy("doc_id").count().filter(F.col("count") > 1).count()
-    assert dups == 0
-    for k, w in want.items():
-        assert (got[k]["n_tok"], got[k]["source"]) == (w["n_tok"], w["source"])
-    # telemetry recorded
-    st = t.preimage_stats[-1]
-    assert st["files_total"] >= st["files_read"] > 0
-
-
-def test_read_version_for_keys_prunes_on_key_bucketing(spark, tmp_path):
-    """Key-bucketed control: few probe keys must prune most bucket files."""
-    root = str(tmp_path / "kb")
-    t = LakeTable.create(spark, root, fields=FIELDS, n_buckets=32)
-    t.set_key_blooms(True)
-    t.merge_epoch(_events(spark, 2000), "e1")
-    keys = spark.createDataFrame([("k3",), ("k77",)], "doc_id string")
-    pre = t.read_version_for_keys(t.version, keys)
-    assert pre.count() == 2
-    st = t.preimage_stats[-1]
-    assert st["files_read"] <= 2 < st["files_total"]
 
 
 def test_syncdiff_array_canonicalization_unambiguous(spark, tmp_path):

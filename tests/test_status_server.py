@@ -205,11 +205,14 @@ class _FakeScheduler:
     HTTP layer resolves the source capture and delegates verbatim."""
 
     def __init__(self):
+        import threading
+
         self.captures = {
             "c1": _FakeCapture(["ta", "tb"]),
             "c2": _FakeCapture([], ()),
         }
         self.calls = []
+        self.lock = threading.RLock()
 
     def move_table(self, table, src, dst):
         self.calls.append(("move", table, src, dst))
@@ -244,6 +247,36 @@ def test_move_and_rebalance_with_live_scheduler(tmp_path):
             with pytest.raises(urllib.error.HTTPError) as e:
                 _post(base + "/capture/owner/move_table", data)
             assert e.value.code == 400, data
+    finally:
+        srv.shutdown()
+
+
+def test_move_table_post_waits_for_the_owner_lock(tmp_path):
+    """The source-capture lookup and the move run under scheduler.lock, so
+    a POST that arrives while tick() holds it waits for the round to end."""
+    import threading
+    import time
+
+    sched = _FakeScheduler()
+    srv, port = serve_background(None, None, scheduler=sched)
+    base = f"http://127.0.0.1:{port}"
+    got = []
+
+    def post():
+        got.append(_post(
+            base + "/capture/owner/move_table",
+            {"cf-id": "f", "target-cp-id": "c2", "table-id": "tb"},
+        ))
+
+    try:
+        with sched.lock:  # what tick() holds for its whole round
+            th = threading.Thread(target=post, daemon=True)
+            th.start()
+            time.sleep(0.5)
+            assert not got and not sched.calls, "POST ran inside the owner's round"
+        th.join(timeout=5)
+        assert not th.is_alive()
+        assert got[0][0] == 200 and sched.calls == [("move", "tb", "c1", "c2")]
     finally:
         srv.shutdown()
 

@@ -194,14 +194,14 @@ def attach_old_images(
     # touches a small fraction of the snapshot — the 10^10-scale design
     # point where change volume ≪ corpus: read volume and collapse shuffle
     # become ∝ the batch's keys. A bulk batch touching most keys (backfill,
-    # the replay bench) would pay probe+broadcast overhead for no pruning:
-    # it reads the whole snapshot with ZERO extra jobs instead — a batch
-    # touching ≥25% of rows touches essentially every bucket, so
+    # the replay bench) would pay the key collect and broadcast for no
+    # pruning: it reads the whole snapshot with ZERO extra jobs instead — a
+    # batch touching ≥25% of rows touches essentially every bucket, so
     # bucket-level pruning could not pay for its own aggregation job. The
     # gate count rides the caller's part_stats fold for free (n_events);
     # events ≥ keys, so events*4 < snapshot rows guarantees the batch is
-    # genuinely sparse, and the sparse branch's key-distinct is then ∝ the
-    # (small) batch by construction.
+    # genuinely sparse, and the keys the sparse branch collects to the
+    # driver are then fewer than snapshot rows / 4 by construction.
     unioned = _pre_image_union(table, ready, pre_version, payload, n_events)
     unioned = with_old_image(unioned, payload)
     return unioned.filter(~F.col("_pre")).drop("_pre")
@@ -225,7 +225,13 @@ def _pre_image_union(
     join stages, and the snapshot rows pass through the key shuffle
     once instead of being SMJ-copied onto every event of their key.
     A batch DDL may have added columns the snapshot predates — their
-    pre-image is NULL by construction (type-cast NULL fills)."""
+    pre-image is NULL by construction (type-cast NULL fills).
+
+    A sparse batch (events * 4 < the snapshot's rows) reads the snapshot
+    with read_version_for_keys, which holds the batch's keys once on the
+    driver, as Arrow: at most one per event, so fewer than snapshot rows
+    / 4. Any other batch reads the whole snapshot (read_version_raw). The
+    snapshot manifest is loaded once for both the sizing and the read."""
     from ..model import SYS_DELETED
 
     key = table.key_col
@@ -234,11 +240,7 @@ def _pre_image_union(
     pre_rows = table.version_rows(pre_version)
     sparse = pre_rows is not None and n_events * 4 < pre_rows
     if sparse:
-        # one distinct, localCheckpointed so the file-prune probe job and
-        # the semi-join read one materialization; the driver sees O(files)
-        # pruned indexes, never keys
-        keys_df = ready.select(F.col(key)).distinct().localCheckpoint(eager=True)
-        old = table.read_version_for_keys(pre_version, keys_df)
+        old = table.read_version_for_keys(pre_version, ready.select(key))
     else:
         old = table.read_version_raw(pre_version)
     types = {f["name"]: f["type"] for f in table.current_fields}
